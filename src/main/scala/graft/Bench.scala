@@ -248,7 +248,7 @@ object Bench {
       // so a keyed-window extraction cached at bench scale ran 32
       // one-row partitions, each paying the ~100 ms fixed task cost
       // (mtail_engine_sessions: 198 tasks / 9 cpu-s → 30 tasks /
-      // 1.4 cpu-s, r20 ProfQ A/B). Scale-adaptive by construction:
+      // 1.4 cpu-s, OPTIMIZATION_r20.md). Scale-adaptive by construction:
       // AQE targets its advisory partition size, so big state keeps
       // full parallelism.
       .config(
@@ -632,7 +632,7 @@ object Bench {
           // commit (delta write + per-task codegen), so partitions
           // beyond rows/25k are pure overhead — at 10 k-row batches,
           // 32 state partitions cost 4.5 s/batch vs 0.9 s at the
-          // sized value (ProfStream A/B, OPTIMIZATION_r19.md). The
+          // sized value (measured A/B, OPTIMIZATION_r19.md). The
           // derivation is scale-adaptive: a production-size microbatch
           // (millions of rows) gets every core, exactly as before.
           // Read at query START (state partitioning is fixed in the

@@ -43,7 +43,7 @@ object Tables {
     // same-width repartition and would pay a full text shuffle for it.
     // The split count is probed from the LAZY physical scan
     // (sparkPlan.execute() builds the scan RDD without running it, the
-    // same probe PlanBuilder's spreadNarrowInput uses) — `df.rdd`
+    // same probe PlanBuilder's narrow-input spread uses) — `df.rdd`
     // would instantiate the plan through the AQE path once per call
     // site, double-planning the scan on the driver (r19 verdict #7).
     // Sound here because every caller passes a narrow frame (a

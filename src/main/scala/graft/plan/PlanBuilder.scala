@@ -121,20 +121,12 @@ final class PlanBuilder(program: Ir.Program, lines: DataFrame,
     // 100k-line engine battery queries at sf0.1. Catalyst's estimated
     // sizeInBytes gates it: tiny scans/driver tables keep their
     // partitioning; large inputs (and streaming microbatches, whose
-    // LogicalRDD estimate is conservatively huge) spread. Both the
-    // switch and the floor are conf-overridable.
-    val conf = lines.sparkSession.conf
-    val enabled = conf
-      .getOption("spark.graft.spreadNarrowInput").forall(_ != "false")
-    val minBytes = conf
-      .getOption("spark.graft.spreadNarrowInput.minBytes")
-      .flatMap(v => scala.util.Try(v.trim.toLong).toOption)
-      .getOrElse(16L << 20) // malformed values keep the default
+    // LogicalRDD estimate is conservatively huge) spread.
     val bigEnough =
       lines.queryExecution.optimizedPlan.stats.sizeInBytes >=
-        BigInt(minBytes)
+        BigInt(16L << 20)
     inputUnderSpreadFloor = !bigEnough
-    if (enabled && bigEnough && n * 2 <= target)
+    if (bigEnough && n * 2 <= target)
       lines.repartition(target)
     else lines
   }
@@ -456,9 +448,7 @@ final class PlanBuilder(program: Ir.Program, lines: DataFrame,
           case "sum" => coalesce(sum(value).over(wg), zeroOf(vt))
           case _ => last(value, ignoreNulls = true).over(wg)
         }
-      } else if (inputUnderSpreadFloor && lines.sparkSession.conf
-          .getOption("spark.graft.keylessRead.direct")
-          .forall(_ != "false")) {
+      } else if (inputUnderSpreadFloor) {
         // Input below the spread floor (the SAME size gate that keeps
         // tiny inputs unspread): the two-phase bucket decomposition
         // would pay an extra full offsets pass + join to parallelize a
@@ -883,10 +873,7 @@ final class PlanBuilder(program: Ir.Program, lines: DataFrame,
         // fold through ONE exploded union, ONE exchange+sort and one
         // (or two, for fold mode) Window operator instead of one
         // exchange+sort per relation. Relations never interact: each
-        // window function masks to its own rows (`__r`). Opt-out knob
-        // for A/B: spark.graft.asof.mergeSameKey.
-        val mergeSameKey = lines.sparkSession.conf
-          .get("spark.graft.asof.mergeSameKey", "true").toBoolean
+        // window function masks to its own rows (`__r`).
         val asofWithSrc = readyAsofs.toSeq.sortBy(_._1).map {
           case (n, sp) =>
           // the probe leg builds from the EARLIEST snapshot holding
@@ -901,8 +888,7 @@ final class PlanBuilder(program: Ir.Program, lines: DataFrame,
           (n, sp, src)
         }
         val mergedGroups: Seq[Seq[(String, AsofSpec, DataFrame)]] =
-          if (!mergeSameKey) Nil
-          else asofWithSrc
+          asofWithSrc
             .filter { case (_, sp, _) =>
               // keyed non-concat folds only: the keyless path is a
               // different (bucketed) machine, and concat's capped-inc
@@ -1238,7 +1224,9 @@ final class PlanBuilder(program: Ir.Program, lines: DataFrame,
     * operator. Probe extraction and the ord-join back stay
     * per-relation (each read observes the fold at ITS OWN site
     * position — same-line visibility differs between reads, so probe
-    * rows cannot be shared).
+    * rows cannot be shared). Reached, e.g., by a keyed value read
+    * plus the `del … after` existence companion of the same cell
+    * (pinned in DelAfterSpec).
     */
   private def mergedKeyedAsofs(src: DataFrame,
       group: Seq[(String, AsofSpec)]): Unit = {

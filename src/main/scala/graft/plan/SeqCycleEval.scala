@@ -230,14 +230,6 @@ private[plan] object SeqCycleEval {
     val vts = metricVts
     val cap = textCap
 
-    if (sys.env.contains("SPARK_GRAFT_SEQ_TIMING"))
-      System.err.println("[seqdbg] metrics=" + metrics.map(_.name) +
-        "\n  reads=" + reads.zip(rtReads).map { case (r, rt) =>
-          s"${r.name}@${rt.pos} m=${r.metric} ord=${rt.stateOrd} key=${rt.key}"
-        }.mkString("\n    ") +
-        "\n  sites=" + rtSites.map(s =>
-          s"idx=${s.idx} op=${s.op} m=${metrics(s.metric).name} key=${s.key} cond=${s.cond} val=${s.value}")
-          .mkString("\n    "))
     // merged event walk positions: reads refresh BEFORE the same-idx
     // site applies (a read at site j sees writes from sites < j only)
     val positions = (rtSites.map(_.idx) ++ rtReads.map(_.pos))
@@ -281,7 +273,6 @@ private[plan] object SeqCycleEval {
         case DoubleType => 0.0d
         case _ => UTF8String.fromString("")
       }
-      val walkT0 = System.nanoTime()
       val stateRow = new GenericInternalRow(rtReads.length)
       val joined = new JoinedRow
       def copyOf(v: Any): Any = v match {
@@ -383,10 +374,6 @@ private[plan] object SeqCycleEval {
           r += 1
         }
         out: InternalRow
-      } ++ {
-        if (sys.env.contains("SPARK_GRAFT_SEQ_TIMING"))
-          System.err.println(f"[seqwalk] ${(System.nanoTime() - walkT0) / 1e9}%.2f s in-task")
-        Iterator.empty
       }
     }
   }

@@ -51,20 +51,6 @@ object EngineQueries {
     finally pb.unpersistExtraction()
   }
 
-  /** The UNMATERIALIZED snapshot plan (no extraction cache, no
-    * checkpoint): every window/offsets-join/as-of subtree inline — the
-    * optimization rounds' internal-plan evidence surface
-    * ([[graft.PlanDumpEngine]]). The declared queries go through
-    * [[run]]'s checkpointing lifecycle, whose final explain shows only
-    * the checkpoint scan.
-    */
-  def internalPlan(s: SparkSession, dir: String,
-      name: String): DataFrame = {
-    val (src, lineExpr) = specs(name)
-    val program = Frontend.parse(src, "engine_query.mtail")
-    new PlanBuilder(program, lines(s, dir, lineExpr), 0).snapshot()
-  }
-
   /** (program source, line expression) per engine query. */
   val specs: Map[String, (String, org.apache.spark.sql.Column)] = Map(
     "mtail_engine_counters" -> (

@@ -32,11 +32,6 @@ import graft.plan.PlanBuilder
   * shuffles as batch mode; only aggregated cells reach the driver store.
   */
 object StreamRunner {
-  /** GRAFT_BATCH_TIMING=1: per-batch phase timing on stderr (profiling
-    * aid for the optimization rounds; no effect on results). */
-  private[streaming] val batchTiming: Boolean =
-    sys.env.get("GRAFT_BATCH_TIMING").contains("1")
-
   /** one daemon thread for the concurrent per-batch instrumentation
     * action ([[StreamRunner.processWithPlan]]); a single thread
     * suffices — at most one batch is in flight per runner and the
@@ -236,14 +231,14 @@ final class StreamRunner(program: Ir.Program, spark: SparkSession,
         "spark.sql.constraintPropagation.enabled" -> "false")
       val prev = scoped.map { case (k, _) => k -> conf.getOption(k) }
       scoped.foreach { case (k, v) => conf.set(k, v) }
-      try processBatchInner(batch, batchId)
+      try processBatchInner(batch)
       finally prev.foreach {
         case (k, Some(v)) => conf.set(k, v)
         case (k, None) => conf.unset(k)
       }
     }
 
-  private def processBatchInner(batch: DataFrame, batchId: Long): Unit = {
+  private def processBatchInner(batch: DataFrame): Unit = {
     if (!batch.isEmpty) {
       val withCols = batch
         .withColumn("filename",
@@ -255,7 +250,6 @@ final class StreamRunner(program: Ir.Program, spark: SparkSession,
           if (batch.columns.contains("off"))
             struct(col("filename").as("f"), col("off").as("o"))
           else monotonically_increasing_id())
-      val tb0 = System.nanoTime()
       val pb = new PlanBuilder(prog, withCols, defaultYear,
         carriedState, overrideZone)
       // one scan of the batch feeds every metric branch, the state
@@ -267,20 +261,10 @@ final class StreamRunner(program: Ir.Program, spark: SparkSession,
       // with del sites — all scan the same extraction
       pb.materializeExtraction(extraReaders = 1 + prog.decls.count(d =>
         pb.readMetrics.contains(d.name)) + pb.deleteMetricCount)
-      val t1 = System.nanoTime()
       val nLines =
         try processWithPlan(pb)
         finally pb.unpersistExtraction()
       observeBatchDuration((System.nanoTime() - t0) / 1e9, nLines)
-      // ad-hoc attribution for the optimization rounds: per-batch
-      // phase decomposition on stderr (plan build vs extraction
-      // materialization vs snapshot/merge jobs); off unless asked
-      if (StreamRunner.batchTiming) {
-        val t2 = System.nanoTime()
-        System.err.println(f"[graft-batch] id=$batchId lines=$nLines " +
-          f"build=${(t0 - tb0) / 1e9}%.3f extract=${(t1 - t0) / 1e9}%.3f " +
-          f"rest=${(t2 - t1) / 1e9}%.3f")
-      }
     }
   }
 
@@ -327,16 +311,7 @@ final class StreamRunner(program: Ir.Program, spark: SparkSession,
       // BEFORE the previous batch's state checkpoints are freed
       val instrF = scala.concurrent.Future(pb.instrumentation().collect())(
         StreamRunner.auxEc)
-      def phase[A](name: String)(f: => A): A =
-        if (!StreamRunner.batchTiming) f
-        else {
-          val t = System.nanoTime()
-          val r = f
-          System.err.println(f"[graft-batch-phase] $name=${
-            (System.nanoTime() - t) / 1e9}%.3f")
-          r
-        }
-      val cells = phase("snapshot")(Snapshot.collect(pb.snapshot()))
+      val cells = Snapshot.collect(pb.snapshot())
       // runtime `del` reaching the cumulative store: label tuples
       // whose delete fired THIS batch lose their pre-batch cell before
       // the merge, so the snapshot's post-del state (restarted cell,
@@ -344,12 +319,12 @@ final class StreamRunner(program: Ir.Program, spark: SparkSession,
       // delete-last/restart semantics composed across batches. Without
       // this a del in batch N+1 could never erase a cell merged in
       // batch ≤ N (the store had no delete path at all).
-      phase("deletes")(pb.batchDeleteDfs().foreach { case (decl, keys) =>
+      pb.batchDeleteDfs().foreach { case (decl, keys) =>
         keys.collect().foreach { row =>
           store.remove(decl.exportName, decl.keys.zipWithIndex.map {
             case (k, i) => k -> row.getString(i) }.toMap)
         }
-      })
+      }
       // zero-init counter cells (0 @ epoch-0) merge too: creating the
       // key means a declared-but-never-matched counter is exported as
       // 0 from the first batch, like the reference's zero-init
@@ -362,10 +337,9 @@ final class StreamRunner(program: Ir.Program, spark: SparkSession,
       // truncates lineage so batch N's plan never re-derives batches
       // 0..N-1 (old checkpoint RDDs are dropped by the ContextCleaner
       // once unreferenced)
-      val newState = phase("state")(
-        pb.finalReadStateDfs().map { case (m, sdf) =>
-          m -> sdf.localCheckpoint(true)
-        })
+      val newState = pb.finalReadStateDfs().map { case (m, sdf) =>
+        m -> sdf.localCheckpoint(true)
+      }
       // batch N's checkpoints are materialized, so batch N−1's blocks
       // are dead once every read of this batch completes — they are
       // freed at the END of this method (after the instrumentation
@@ -424,8 +398,8 @@ final class StreamRunner(program: Ir.Program, spark: SparkSession,
       }
       // self-instrumentation: per-file line/error counts this batch
       // (submitted concurrently above; join here)
-      val instr = phase("instr")(scala.concurrent.Await.result(instrF,
-        scala.concurrent.duration.Duration.Inf))
+      val instr = scala.concurrent.Await.result(instrF,
+        scala.concurrent.duration.Duration.Inf)
       val totalLines = instr.map(_.getAs[Long]("lines")).sum
       val totalErrs = instr.map(_.getAs[Long]("errors")).sum
       internalStore.merge(

@@ -24,8 +24,8 @@ import org.apache.spark.sql.SparkSession
   *     defaultParallelism)` derives from DATA VOLUME, so a
   *     production-size microbatch (millions of rows) still gets every
   *     core while a small tail gets exactly what its state needs
-  *     (ProfStream A/B: 10 k-row batches at 32 partitions cost
-  *     4.5 s/batch vs 0.9 s at the sized value).
+  *     (measured A/B, OPTIMIZATION_r19.md: 10 k-row batches at 32
+  *     partitions cost 4.5 s/batch vs 0.9 s at the sized value).
   *
   * Call before `writeStream.start()` — Spark pins both values at
   * query start. Returns the session for chaining.

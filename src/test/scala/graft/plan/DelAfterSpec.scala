@@ -200,4 +200,54 @@ class DelAfterSpec extends SparkSpec {
     assert(eng(("tail", Map("k" -> "alpha"))) == VInt(1))
     assert(eng.get(("tail", Map("k" -> "beta"))).isEmpty)
   }
+
+  test("a conditional value read and the Expire existence check of " +
+      "the same cell fold through ONE merged keyed as-of window") {
+    // the cond read of seen[$s] and the `$ex$seen` existence companion
+    // probe the same key with the same value type from the same
+    // source, so the planner folds both relations through one
+    // relation-tagged (`__r`) union and one keyed window
+    // (PlanBuilder.mergedKeyedAsofs) instead of one window each.
+    // The read only runs when $x > 5 and creates the cell, so the
+    // Expire aborts exactly on lines whose key was neither written
+    // nor read before.
+    val src =
+      """counter zero
+        |counter ok
+        |hidden counter seen by k
+        |/^w (?P<s>[a-z]+)$/ { seen[$s]++ }
+        |/^e (?P<s>[a-z]+) (?P<x>\d+)$/ {
+        |  $x > 5 {
+        |    seen[$s] == 0 { zero++ }
+        |  }
+        |  del seen[$s] after 1h
+        |  ok++
+        |}
+        |""".stripMargin
+    val lines = Seq("w alpha", "w beta", "e alpha 3", "e beta 9",
+      "e omega 2", "e omega 7", "e omega 1", "e kappa 8", "w kappa",
+      "e kappa 1", "e zeta 1")
+    val prog = Frontend.parse(src, "delafter.mtail")
+    val pb = new PlanBuilder(prog,
+      LogLines.fromLines(lines.toDF("line"), "line"), 2020)
+    val snap = pb.snapshot()
+    val plan = snap.queryExecution.optimizedPlan
+    val keyed = plan.collect {
+      case w: org.apache.spark.sql.catalyst.plans.logical.Window
+          if w.partitionSpec.exists(_.references.exists(_.name == "k")) =>
+        w
+    }
+    assert(keyed.nonEmpty && keyed.forall(
+      _.child.exists(_.output.exists(_.name == "__r"))),
+      s"every keyed window must fold the merged group:\n$plan")
+    val eng = Snapshot.collect(snap).map(c => (c.name, c.labels) -> c.value)
+      .toMap
+    val vm = MiniVm.run(prog, lines).map(c => (c.name, c.labels) -> c.value)
+      .toMap
+    assert(eng == vm, s"engine $eng vs vm $vm")
+    assert(pb.approxNotes.isEmpty, pb.approxNotes)
+    // omega (first line) and zeta abort; omega's x=7 read creates it
+    assert(eng(("ok", Map.empty)) == VInt(6))
+    assert(eng(("zero", Map.empty)) == VInt(2))
+  }
 }

@@ -10,6 +10,18 @@ import graft.mtail.Snapshot.{VInt, VStr}
   * join is only correct if the per-bucket exclusive offsets compose in
   * bucket order. Built on explicit ordCols so the bucket layout is
   * controlled, not left to partition enumeration.
+  *
+  * The two-phase scan only runs on inputs whose Catalyst size
+  * estimate reaches the 16 MB spread floor; smaller inputs take the
+  * direct global window. Every pin therefore runs twice over the same
+  * lines: once from a driver table (estimate a few hundred bytes,
+  * direct path) and once filtered out of a 4 Mi-row range (estimate
+  * ~100 MB). The over-floor run asserts the join its machine plans
+  * is in the optimized plan — for the prefix-scan pins the offsets
+  * join, so they fail loudly if that input ever drops under the
+  * floor. Fold-mode reads run the keyless as-of machine, whose bucket
+  * decomposition is not floor-gated, and self-referencing conds run
+  * the exact sequential walk; those pins name that join instead.
   */
 class KeylessPrefixSpec extends SparkSpec {
   import spark.implicits._
@@ -19,18 +31,57 @@ class KeylessPrefixSpec extends SparkSpec {
     * buckets of the >>18 bucketing (ord = i * 2^18 / linesPerBucket
     * would be sparse; simpler: place line i at ord i*step with step
     * chosen so consecutive lines land in distinct buckets).
+    * `overFloor` picks the input whose size estimate is over the
+    * spread floor (see the class doc); its plan must contain a join
+    * on a column named `joinCol*`.
     */
-  private def run(src: String, lines: Seq[String], ordStep: Long)
+  private def runOn(src: String, lines: Seq[String], ordStep: Long,
+      overFloor: Boolean, joinCol: String)
       : Map[(String, Map[String, String]), Snapshot.Value] = {
     val prog = Frontend.parse(src, "kpfx")
+    val numbered =
+      if (overFloor)
+        spark.range(0, 1L << 22).filter(col("id") < lines.length)
+          .select(element_at(typedLit(lines), (col("id") + 1).cast("int"))
+            .as("line"), col("id").as("i"))
+      else lines.zipWithIndex.toDF("line", "i")
     val df = LogLines.fromLines(
-      lines.zipWithIndex.toDF("line", "i")
+      numbered
         .withColumn("__ord", col("i").cast("long") * ordStep)
         .select("line", "__ord"),
       "line", ordCol = Some(col("__ord")))
-    Snapshot.collect(new PlanBuilder(prog, df, 0).snapshot())
-      .map(c => (c.name, c.labels) -> c.value).toMap
+    val snap = new PlanBuilder(prog, df, 0).snapshot()
+    if (overFloor) {
+      val plan = snap.queryExecution.optimizedPlan
+      assert(plan.exists {
+        case j: org.apache.spark.sql.catalyst.plans.logical.Join =>
+          j.condition.exists(_.references.exists(
+            _.name.startsWith(joinCol)))
+        case _ => false
+      }, s"over-floor input must plan a join on $joinCol:\n$plan")
+    }
+    Snapshot.collect(snap).map(c => (c.name, c.labels) -> c.value).toMap
   }
+
+  /** the pin's result, checked equal across both inputs and both ord
+    * layouts (one line per bucket, and all lines in one bucket) */
+  private def run(src: String, lines: Seq[String], joinCol: String)
+      : Map[(String, Map[String, String]), Snapshot.Value] = {
+    val spread = runOn(src, lines, bucket, overFloor = false, joinCol)
+    Seq((1L, false), (bucket, true), (1L, true)).foreach {
+      case (step, overFloor) =>
+        assert(runOn(src, lines, step, overFloor, joinCol) == spread,
+          s"ordStep=$step overFloor=$overFloor")
+    }
+    spread
+  }
+
+  /** the prefix scan's offsets join (floor-gated two-phase path) */
+  private val OffsetsJoin = "__koff_"
+  /** the keyless as-of machine's bucket-offsets join */
+  private val AsofBucketJoin = "__pid"
+  /** the sequential walk's results joined back on the line ordinal */
+  private val SeqWalkJoin = "__sq_ord"
 
   private val bucket = 1L << 18
 
@@ -45,10 +96,8 @@ class KeylessPrefixSpec extends SparkSpec {
         |""".stripMargin
     val data = (1 to 9).map(_.toString)
     // one line per bucket: every cross-line read crosses a boundary
-    val spread = run(src, data, bucket)
+    val spread = run(src, data, OffsetsJoin)
     assert(spread(("snap", Map.empty)) == VInt(45), spread)
-    // and identical to the single-bucket layout
-    assert(run(src, data, 1L) == spread)
   }
 
   test("keyless last-write read composes across bucket boundaries") {
@@ -63,9 +112,8 @@ class KeylessPrefixSpec extends SparkSpec {
     val data = Seq("7", "11", "13")
     // read-before-write: `out` sees the PREVIOUS line's g, written in
     // the previous bucket
-    val spread = run(src, data, bucket)
+    val spread = run(src, data, OffsetsJoin)
     assert(spread(("out", Map.empty)) == VInt(11), spread)
-    assert(run(src, data, 1L) == spread)
   }
 
   test("keyless mixed =/++ fold read composes across buckets " +
@@ -78,9 +126,8 @@ class KeylessPrefixSpec extends SparkSpec {
         |/^read$/ { out = m }
         |""".stripMargin
     val data = Seq("inc 1", "set 100", "inc 2", "inc 3", "read")
-    val spread = run(src, data, bucket)
+    val spread = run(src, data, AsofBucketJoin)
     assert(spread(("out", Map.empty)) == VInt(105), spread)
-    assert(run(src, data, 1L) == spread)
   }
 
   test("keyless text set/concat fold read composes across buckets") {
@@ -92,9 +139,8 @@ class KeylessPrefixSpec extends SparkSpec {
         |/^read$/ { out = t }
         |""".stripMargin
     val data = Seq("add x", "set ab", "add cd", "add ef", "read")
-    val spread = run(src, data, bucket)
+    val spread = run(src, data, AsofBucketJoin)
     assert(spread(("out", Map.empty)) == VStr("abcdef"), spread)
-    assert(run(src, data, 1L) == spread)
   }
 
   test("self-conditioned write (cond reads the written metric) " +
@@ -118,9 +164,8 @@ class KeylessPrefixSpec extends SparkSpec {
     // one line per bucket: p(mark) c(reset fires) c(no-op)
     //                      p(mark) c(reset fires)
     val data = Seq("p", "c", "c", "p", "c")
-    val spread = run(src, data, bucket)
+    val spread = run(src, data, SeqWalkJoin)
     assert(spread(("resets", Map.empty)) == VInt(2), spread)
-    assert(run(src, data, 1L) == spread)
   }
 
   test("cond reading a DIFFERENT keyless metric composes across " +
@@ -135,9 +180,8 @@ class KeylessPrefixSpec extends SparkSpec {
         |""".stripMargin
     // arm in bucket 0; both `go`s in later buckets must see it
     val data = Seq("go", "arm", "go", "go")
-    val spread = run(src, data, bucket)
+    val spread = run(src, data, OffsetsJoin)
     assert(spread(("fired", Map.empty)) == VInt(2), spread)
-    assert(run(src, data, 1L) == spread)
   }
 
   test("cond reads a keyless metric whose only writes appear LATER " +
@@ -156,9 +200,8 @@ class KeylessPrefixSpec extends SparkSpec {
         |/^arm$/ { armed++ }
         |""".stripMargin
     val data = Seq("go", "arm", "go", "go")
-    val spread = run(src, data, bucket)
+    val spread = run(src, data, OffsetsJoin)
     assert(spread(("fired", Map.empty)) == VInt(2), spread)
-    assert(run(src, data, 1L) == spread)
   }
 
   test("mutually-referencing keyless conds compile and fold " +
@@ -181,10 +224,9 @@ class KeylessPrefixSpec extends SparkSpec {
         |}
         |""".stripMargin
     val data = Seq("x", "y", "z", "z")
-    val spread = run(src, data, bucket)
+    val spread = run(src, data, SeqWalkJoin)
     // x: b==0 (nothing written) → a=1; y: a==1 → b=1; z,z: done++
     assert(spread(("done", Map.empty)) == VInt(2), spread)
-    assert(run(src, data, 1L) == spread)
   }
 
   test("DUPLICATE self-conditioned blocks compile: the provisional " +
@@ -209,12 +251,11 @@ class KeylessPrefixSpec extends SparkSpec {
         |}
         |""".stripMargin
     val data = Seq("p", "c", "c", "p", "c")
-    val spread = run(src, data, bucket)
+    val spread = run(src, data, SeqWalkJoin)
     // first block resets on each armed c; the second block's cond
     // re-reads hid0 — within the same line the first block already
     // wrote 0, so it never fires
     assert(spread(("c0", Map.empty)) == VInt(2), spread)
-    assert(run(src, data, 1L) == spread)
   }
 
   test("a bucket with no writes contributes the identity offset") {
@@ -226,8 +267,7 @@ class KeylessPrefixSpec extends SparkSpec {
         |""".stripMargin
     // buckets: [hit] [miss] [miss] [hit] — empty-write buckets between
     val data = Seq("hit", "miss", "miss", "hit")
-    val spread = run(src, data, bucket)
+    val spread = run(src, data, OffsetsJoin)
     assert(spread(("snap", Map.empty)) == VInt(2), spread)
-    assert(run(src, data, 1L) == spread)
   }
 }
