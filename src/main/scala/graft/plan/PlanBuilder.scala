@@ -153,10 +153,10 @@ final class PlanBuilder(program: Ir.Program, lines: DataFrame,
     * referenced them while building). A read column nothing consumed
     * yet can still be REPLACED wholesale — the cycle replay uses this
     * to reclaim a group read that materialized through the
-    * distributed machinery before the cycle was observable, instead
-    * of declaring the mixed-semantics corner. Still-pending entries
-    * are NOT consumers: they resolve by name at their own
-    * materialization and pick up the replacement.
+    * distributed machinery before the cycle was observable; a
+    * consumed one makes [[lastResortSeqResolve]] refuse the group.
+    * Still-pending entries are NOT consumers: they resolve by name at
+    * their own materialization and pick up the replacement.
     */
   private val consumedRefs = mutable.Set[String]()
   private def noteConsumed(refs: Iterable[String]): Unit =
@@ -334,64 +334,24 @@ final class PlanBuilder(program: Ir.Program, lines: DataFrame,
     * 128 MiB of input) cumulated in bucket order and joined back by
     * bucket — broadcastable by construction.
     *
-    * Pass 1 returns the CONTENT-NAMED pass-2 column (stableName over
-    * the (metric, mode) memo key — the same cross-pass contract as
-    * __asof/__carry): the frozen conds that capture it resolve, in
-    * pass 2, to the registration built against the FULL site list and
-    * the distributed two-phase scan. This both removes the
-    * single-task `Window.partitionBy()` residue pre-r15 frozen conds
-    * carried AND lifts the unroll bottom one level — a frozen cond
-    * reading keyless state now sees writes that appear LATER in
-    * program text (pass-1 visibility froze them at zero before;
-    * KeylessPrefixSpec pins the text-order case).
+    * Pass 2 returns the CONTENT-NAMED column (stableName over the
+    * (metric, mode) memo key — the same cross-pass contract as
+    * __asof/__carry): a frozen pass-1 cond that captures the read
+    * resolves to the registration built against the FULL site list
+    * and the distributed two-phase scan, so it sees writes that appear
+    * LATER in program text (KeylessPrefixSpec pins the text-order
+    * case).
     *
-    * Self/mutual reference: if pass 2's value for this read itself
-    * references this (or a mutually-referenced) kpfx name — a write
-    * cond reading the metric being folded — the name can't resolve to
-    * its own pending registration. Pass 1 therefore stores a RAW
-    * provisional (the exact single-partition global window over
-    * pass-1-visible deltas) per name, and the self-reference is
-    * substituted with it: the documented one-level-unroll bottom,
-    * exact for absorbing resets, single-task ONLY for that bottom
-    * term. The provisional-reference graph is acyclic by construction
-    * (a provisional can only reference names created strictly earlier
-    * in the pass-1 walk), so substitution terminates. Memoized per
-    * (metric, mode): every read site of a metric shares one offsets
-    * join and one materialized column.
+    * Self/mutual reference — a write cond reading the metric being
+    * folded — leaves this registration waiting on itself. The flush
+    * loop resolves that group exactly through [[SeqCycleEval]] (see
+    * [[seqCyclicMetrics]]) or fails the plan build; there is no
+    * approximate bottom. Memoized per (metric, mode): every read site
+    * of a metric shares one offsets join and one materialized column.
     */
   private val readMemo = mutable.Map[(String, String), Column]()
   private var kpfxSeq = 0
 
-  /** pass-1 raw provisionals per content name — the unroll bottom for
-    * self/mutual keyless reference (see [[keylessPrefix]]). Filled in
-    * pass 1, consumed by pass-2 substitution; NOT cleared at the
-    * pass-2 reset (the raw windows reference only walk-deterministic
-    * __m/ord columns, which pass 2 re-registers under identical
-    * names).
-    */
-  private val kpfxProvisional = mutable.Map[String, Column]()
-
-  /** Audit trail of every place this plan surrendered VM-exactness
-    * (a one-level-unroll provisional spliced along a genuine cycle
-    * edge) or mixed resolution semantics ([[lastResortSeqResolve]]'s
-    * lenient corner: some reads of a cyclic group already
-    * materialized through the distributed machinery while the rest
-    * replay sequentially). Empty for every program the exact
-    * machinery covers — the golden corpus and the directed cycle
-    * specs assert it stays empty. Each entry is ALSO logged to
-    * stderr at plan build, so a deviation is never silent (round-17
-    * contract — the r16 verdict's one remaining silent-deviation
-    * finding). The branch-divergence substitution (a kpfx name pass 2
-    * never registered — the read took a different branch than
-    * pass 1) is recorded under its own label: it is believed
-    * value-exact for the shapes that reach it, and the VM-differential
-    * fuzz ([[graft.streaming.VmDifferentialSpec]]) holds it to that.
-    */
-  val approxNotes = mutable.Buffer[String]()
-  private def noteApprox(msg: String): Unit = {
-    approxNotes += msg
-    System.err.println(s"[graft] APPROXIMATION ${program.name}: $msg")
-  }
   /** read column name (`__mrd_*`) → metric it reads — lets the
     * last-resort cycle detection map COMPILED cond refs (which include
     * the conservative line-abort guard terms) back to metric-level
@@ -399,26 +359,11 @@ final class PlanBuilder(program: Ir.Program, lines: DataFrame,
     */
   private val readNameMetric = mutable.Map[String, String]()
 
-  /** replace every reference to column `name` inside `c` with `repl`
-    * (eager Catalyst tree transform — composite Columns convert
-    * lazily, see GraftBridge.eagerExpression).
-    */
-  private def substituteRef(c: Column, name: String,
-      repl: Column): Column = {
-    val replE = org.apache.spark.sql.GraftBridge.eagerExpression(repl)
-    org.apache.spark.sql.GraftBridge.column(
-      org.apache.spark.sql.GraftBridge.eagerExpression(c).transform {
-        case a: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-            if a.nameParts.length == 1 && a.nameParts.head == name =>
-          replE
-      })
-  }
-
   /** pass-2 cross-line reads materialize as COLUMNS of the (cached)
     * line relation — each window computes once, and the per-metric
     * aggregation branches read data instead of re-running a shuffle
-    * per read per branch. Pass 1 returns the raw expression (see
-    * [[keylessPrefix]] for why).
+    * per read per branch. Pass 1 returns the raw expression: its read
+    * impls are discarded at the pass-2 reset.
     */
   private def readMaterialized(metric: String, mode: String,
       keyId: String, expr: => Column): Column =
@@ -436,12 +381,10 @@ final class PlanBuilder(program: Ir.Program, lines: DataFrame,
       val ordT = curDf.schema("ord").dataType
       val name = stableName("__kpfx", metric + "|" + mode)
       if (resolvedSites.isEmpty) {
-        // pass 1: the raw exact global window, INLINE. This branch
-        // only ever executes inside a pass-1 provisional (the __mrd
-        // wrapper defers the read itself), so the raw form is exactly
-        // the self-contained substitution bottom self/mutual cycles
-        // need — a content-named reference here would re-enter the
-        // cycle the provisional exists to break.
+        // pass 1: the raw exact global window, INLINE, registering
+        // nothing. This branch only runs inside a pass-1 read impl,
+        // which the pass-2 reset discards (the __mrd wrapper defers
+        // the read itself), so no machinery is built for it.
         val wg = Window.partitionBy().orderBy(col("ord"))
           .rowsBetween(Window.unboundedPreceding, -1)
         mode match {
@@ -629,223 +572,31 @@ final class PlanBuilder(program: Ir.Program, lines: DataFrame,
             w.keys ++ Seq(w.cond, w.value)))
             .flatMap(refsOf).filter(_.startsWith("__")).forall(avail)
         }
-        // LAST RESORT before declaring a cycle: an unavailable
-        // __kpfx reference that pass 2 never registered (the read took
-        // a different branch than pass 1 — e.g. pass 1 saw only inc
-        // sites and returned the kpfx name, pass 2 sees set+inc and
-        // goes through the as-of fold) or that forms a genuine
-        // self/mutual cycle bottoms out with the pass-1 provisional
-        // (see keylessPrefix). The provisional-reference graph is
-        // acyclic, so this strictly reduces the unresolved set.
+        // nothing is ready: the remaining registrations wait on each
+        // other. A SEMANTICALLY cyclic metric group (a write whose
+        // cond/value/key reads a metric of the group) is a sequential
+        // automaton — resolve its reads exactly with the one-task state
+        // machine ([[SeqCycleEval]]) and let downstream machinery
+        // consume the materialized columns. A cycle only the compiled
+        // read graph shows (abort guard terms) gets the same exact
+        // replay through [[lastResortSeqResolve]]. Anything else is a
+        // plan this builder cannot make VM-exact: fail the build.
         if (readyJoins.isEmpty && readyLazy.isEmpty &&
           readyAsofs.isEmpty) {
-          // refs of a REGISTERED-but-unmaterialized name, across all
-          // three registries, for the cycle test below
-          def refsOfName(n: String): Set[String] =
-            pending.get(n).map(c => refsOf(c))
-              .orElse(pendingAsofs.get(n).map(sp =>
-                (sp.probeKeys ++ sp.writes.flatMap(w =>
-                  w.keys ++ Seq(w.cond, w.value))).flatMap(refsOf).toSet))
-              .orElse(pendingLazyJoins.get(n).map {
-                case (k, needs, _) => refsOf(k) ++ needs })
-              .getOrElse(Set.empty).filter(_.startsWith("__"))
-          def registered(n: String): Boolean =
-            pending.contains(n) || pendingAsofs.contains(n) ||
-              pendingLazyJoins.contains(n)
-          def reaches(from: String, target: String): Boolean = {
-            val seen = mutable.Set[String]()
-            def go(n: String): Boolean = refsOfName(n).exists(r =>
-              r == target || (seen.add(r) && go(r)))
-            go(from)
-          }
-          // EXACT bottom first: a SEMANTICALLY cyclic metric group
-          // (keyed or keyless — a write whose cond/value/key reads a
-          // metric of the group) is a sequential automaton — resolve
-          // its reads with the one-task state machine
-          // ([[SeqCycleEval]]), VM-exact, and let downstream machinery
-          // consume the materialized columns. The name-reference
-          // graph's APPARENT cycles (pass-1/pass-2 branch divergence)
-          // stay with the provisional substitution below — resolving
-          // those sequentially would trade the distributed prefix scan
-          // for a one-task walk on acyclic programs.
           val cycMetrics = seqCyclicMetrics
-          val exactResolved =
-            cycMetrics.nonEmpty && trySeqCycleResolve(cycMetrics, avail)
-          // while a feasible group WAITS for its residual inputs, its
-          // reads and their exclusively-owned machinery are fenced off
-          // from the provisional substitution — bottoming them would
-          // materialize the one-level unroll the automaton replaces.
-          // Machinery a non-group entry also references is NOT fenced
-          // (an inter-tangled name graph keeps the r15 bottom there).
-          val fenced: Set[String] =
-            if (exactResolved || cycMetrics.isEmpty) Set.empty
-            else {
-              val rds = seqReadInfo.collect {
-                case (n, i) if cycMetrics(i.metric) => n }.toSet
-              val gcable = Seq("__asof_", "__kpfx_", "__koff_",
-                "__carry_")
-              val protectable = mutable.Set[String](rds.toSeq: _*)
-              var grown = true
-              while (grown) {
-                grown = false
-                val outside = (pending.keys ++ pendingAsofs.keys ++
-                  pendingJoins.keys ++ pendingLazyJoins.keys)
-                  .filterNot(protectable).toSeq
-                val outsideRefs = outside.flatMap(refsOfName).toSet
-                val candidates = protectable.toSeq.flatMap(refsOfName)
-                  .filter(n => gcable.exists(n.startsWith))
-                  .filterNot(protectable)
-                  .filterNot(outsideRefs)
-                if (candidates.nonEmpty) {
-                  protectable ++= candidates; grown = true
-                }
-              }
-              protectable.toSet
-            }
-          // substitute the provisional ONLY along genuine cycle edges
-          // (the ref's own registration transitively depends on this
-          // entry) or for names pass 2 never registered (the read took
-          // a different branch than pass 1). Everything else resolves
-          // with the REAL column once the cycle is broken — bottoming
-          // it too would silently freeze exact reads at pass-1 values.
-          // splice-edge classes: a name pass 2 never registered is the
-          // pass-1/pass-2 branch divergence (believed value-exact); a
-          // registered name whose registration reaches back here is a
-          // genuine cycle edge (the declared non-VM unroll). The
-          // driver below takes divergence edges FIRST and gives the
-          // exact compiled-graph replay a chance before any cycle
-          // edge is declared.
-          def spliceEdge(entry: String, r: String,
-              allowCycle: Boolean): Boolean =
-            !avail(r) && kpfxProvisional.contains(r) &&
-              (if (allowCycle) !registered(r) || reaches(r, entry)
-               else !registered(r))
-          def unresolvedKpfx(entry: String, cols: Seq[Column],
-              allowCycle: Boolean): Set[String] =
-            cols.flatMap(refsOf).toSet
-              .filter(r => spliceEdge(entry, r, allowCycle))
-          var substituted = exactResolved
-          // the substitution scans run off the PRE-resolution `avail`,
-          // so they must not fire in the same iteration an exact
-          // resolution succeeded (a just-resolved read is not yet in
-          // `avail` and its registration is gone — the provisional
-          // would wrongly splice in); the flush loop retries with the
-          // updated relation instead
-          // every splice is audited: a genuine cycle edge bottomed
-          // with the one-level unroll is the surviving non-VM shape
-          // (loud via approxNotes), a branch-divergence splice is the
-          // believed-exact one (distinct label; VmDifferentialSpec
-          // holds it to that)
-          def noteSplice(entry: String, miss: Set[String]): Unit =
-            miss.toSeq.sorted.foreach { r =>
-              noteApprox(s"one-level-unroll provisional spliced for " +
-                s"read '$r' into '$entry' (" +
-                (if (!registered(r)) "pass-1/pass-2 branch divergence"
-                 else "genuine cycle edge — one-level unroll, non-VM " +
-                   "for non-absorbing history") + ")")
-            }
-          def substitutePass(skip: Set[String],
-              allowCycle: Boolean): Unit = {
-          pending.toSeq.foreach { case (pn, c) =>
-            val miss = if (skip(pn)) Set.empty[String]
-              else unresolvedKpfx(pn, Seq(c), allowCycle)
-            if (miss.nonEmpty) {
-              noteSplice(pn, miss)
-              pending(pn) = miss.foldLeft(c)((acc, r) =>
-                substituteRef(acc, r, kpfxProvisional(r)))
-              substituted = true
-            }
-          }
-          pendingAsofs.toSeq.foreach { case (pn, sp) =>
-            val cols = sp.probeKeys ++
-              sp.writes.flatMap(w => w.keys ++ Seq(w.cond, w.value))
-            val miss = if (skip(pn)) Set.empty[String]
-              else unresolvedKpfx(pn, cols, allowCycle)
-            if (miss.nonEmpty) {
-              noteSplice(pn, miss)
-              def sub(c: Column): Column = miss.foldLeft(c)((acc, r) =>
-                substituteRef(acc, r, kpfxProvisional(r)))
-              pendingAsofs(pn) = sp.copy(
-                probeKeys = sp.probeKeys.map(sub),
-                writes = sp.writes.map(w => w.copy(keys = w.keys.map(sub),
-                  cond = sub(w.cond), value = sub(w.value))))
-              substituted = true
-            }
-          }
-          // lazy state joins capture their value columns in the build
-          // closure, so substitution can't rewrite them — instead the
-          // provisional is SELECTED INTO the snapshot under the
-          // missing name, resolving the closure's reference to the
-          // exact same expression the pending-side substitution used
-          // (the two legs of a prefix decomposition must fold the
-          // same value)
-          pendingLazyJoins.toSeq.foreach { case (n, (k, needs, build)) =>
-            val miss = if (skip(n)) Set.empty[String]
-              else (needs ++ refsOf(k))
-                .filter(r => spliceEdge(n, r, allowCycle))
-            if (miss.nonEmpty) {
-              noteSplice(n, miss)
-              val missSeq = miss.toSeq
-              val newNeeds = needs -- miss ++
-                miss.flatMap(r => refsOf(kpfxProvisional(r)))
-              pendingLazyJoins(n) = (k, newNeeds, snap => {
-                // the name may have materialized into the snapshot
-                // between substitution and build — only add columns
-                // the snapshot still lacks, or the reference turns
-                // ambiguous (fuzz iteration 772)
-                val add = missSeq.filterNot(snap.columns.contains)
-                  .map(r => kpfxProvisional(r).as(r))
-                build(if (add.isEmpty) snap
-                  else snap.select(col("*") +: add: _*))
-              })
-              substituted = true
-            }
-          }
-          }
-          if (!exactResolved) {
-            // divergence edges first: believed value-exact, and taking
-            // them never forecloses an exact resolution of the cycles
-            substitutePass(fenced, allowCycle = false)
-            // only genuine cycle edges (or a stall) remain — give the
-            // EXACT compiled-read-graph replay a chance BEFORE any
-            // declared unroll (r19: previously a cycle splice itself
-            // counted as progress, so lastResortSeqResolve was
-            // unreachable for every shape with a live provisional —
-            // the six frozen declared survivors all lived here). Only
-            // programs that would otherwise declare reach this call,
-            // so acyclic plans and the distributed paths of waiting
-            // groups are untouched.
-            if (!substituted && lastResortSeqResolve(avail))
-              substituted = true
-            if (!substituted) substitutePass(fenced, allowCycle = true)
-            // a waiting group whose inputs can ONLY come through its
-            // own fenced machinery makes no progress — surrender
-            // exactness (the pre-r16 one-level unroll, deterministic
-            // and batch-split-consistent) rather than deadlock
-            if (!substituted && fenced.nonEmpty) {
-              noteApprox("cyclic group stalled behind its own fenced " +
-                "machinery; surrendering exactness to the one-level " +
-                "unroll for reads " +
-                fenced.filter(seqReadInfo.contains).toSeq.sorted
-                  .mkString(","))
-              substitutePass(Set.empty, allowCycle = true)
-            }
-          }
-          if (substituted) () // retry the flush loop with bottoms in
-          // no second lastResortSeqResolve here: every !substituted
-          // path already called it above with identical state and got
-          // false (the function is deterministic for unchanged
-          // registries), so re-running it on the crash path is dead
-          else
-          throw new IllegalStateException("circular materialization: " +
-            "unresolved refs " + (pendingAsofs.map { case (pn, sp) =>
-              pn -> ((sp.probeKeys ++ sp.writes.flatMap(w =>
-                w.keys ++ Seq(w.cond, w.value)))
-                .flatMap(refsOf).filter(_.startsWith("__")).toSet --
-                avail)
-            } ++ pending.map { case (pn, c) =>
-              pn -> (refsOf(c).filter(_.startsWith("__")) -- avail)
-            }))
+          val resolved = (cycMetrics.nonEmpty &&
+            trySeqCycleResolve(cycMetrics, avail)) ||
+            lastResortSeqResolve(avail)
+          if (!resolved) throw new IllegalStateException(
+            "circular materialization: unresolved refs " +
+              (pendingAsofs.map { case (pn, sp) =>
+                pn -> ((sp.probeKeys ++ sp.writes.flatMap(w =>
+                  w.keys ++ Seq(w.cond, w.value)))
+                  .flatMap(refsOf).filter(_.startsWith("__")).toSet --
+                  avail)
+              } ++ pending.map { case (pn, c) =>
+                pn -> (refsOf(c).filter(_.startsWith("__")) -- avail)
+              }))
         }
         if (wantPersist && persistedDf.isEmpty) persistNow()
         readyJoins.foreach { case (n, (key, state)) =>
@@ -913,8 +664,8 @@ final class PlanBuilder(program: Ir.Program, lines: DataFrame,
         asofWithSrc.filterNot(t => mergedNames(t._1)).foreach {
           case (n, sp, src) =>
           // materialize each leg's key/value on the base FIRST, as a
-          // plain projection: frozen pass-1 inline reads can carry
-          // window expressions, which the analyzer extracts from a
+          // plain projection: a leg's key or value can carry window
+          // expressions, which the analyzer extracts from a
           // Project but NOT from inside a generator (explode) — and
           // the legs go through one
           val base = src.select(col("*") +:
@@ -959,18 +710,6 @@ final class PlanBuilder(program: Ir.Program, lines: DataFrame,
     }
   }
 
-  /** the SEMANTICALLY cyclic metric groups the automaton can replay:
-    * metric-level edges M → metric(r) for every read column name r
-    * referenced by M's recorded site columns (conds reference reads
-    * as content-named `__mrd` columns since r15, so [[seqReadInfo]]
-    * maps ref names back to metrics). A metric enters the set iff it
-    * reaches itself on THAT graph — NOT the name-reference graph,
-    * whose apparent cycles the provisional substitution exists to
-    * break for acyclic programs (resolving those sequentially would
-    * trade the distributed prefix scan for a one-task walk) — and the
-    * whole group is feasible: recorded site programs and
-    * still-pending reads for every member.
-    */
   /** metrics READ (transitively through keys) by an IR expression. */
   private def irReadMetrics(e: Expr): Set[String] = e match {
     case MetricRead(m, ks) => ks.flatMap(irReadMetrics).toSet + m
@@ -980,6 +719,17 @@ final class PlanBuilder(program: Ir.Program, lines: DataFrame,
     case _ => Set.empty
   }
 
+  /** the SEMANTICALLY cyclic metric groups the automaton can replay:
+    * metric-level edges M → metric(r) for every read column name r
+    * referenced by M's recorded site columns (conds reference reads
+    * as content-named `__mrd` columns since r15, so [[seqReadInfo]]
+    * maps ref names back to metrics). A metric enters the set iff it
+    * reaches itself on THAT graph — NOT the name-reference graph,
+    * which also links reads of acyclic programs (resolving those
+    * sequentially would trade the distributed prefix scan for a
+    * one-task walk) — and the whole group is feasible: recorded site
+    * programs and still-pending reads for every member.
+    */
   private def seqCyclicMetrics: Set[String] = {
     // metric-level read edges, computed WITHOUT compiling anything:
     // site values/keys from the IR, enclosing-condition reads from
@@ -1002,25 +752,28 @@ final class PlanBuilder(program: Ir.Program, lines: DataFrame,
   }
 
   /** LAST RESORT before the circular-materialization crash: the
-    * provisional substitution can deadlock at the MACHINERY level —
-    * spliced pass-1 impls carry references to each other's
-    * asof/kpfx relations, and when those relations' own columns form
-    * a genuine loop there is no provisional to bottom them with
-    * (machinery names are not reads). The loop is real because the
-    * conservative line-abort guard terms make a site's COMPILED cond
-    * read metrics its IR never mentions, so [[seqCyclicMetrics]]'
-    * deliberately-IR-level graph misses the cycle (found by fuzz
-    * seed 5816: two keyed as-of relations mutually tangled through
-    * abort guards). Re-detect cycles on the compiled read graph —
-    * metric-level edges through every `__mrd` ref of every site
-    * cond, mapped back via [[readNameMetric]] — and replay that
-    * group exactly; if the tangle still stalls, escalate to replaying
-    * EVERY metric with a pending read, after which the orphan-GC in
-    * [[trySeqCycleResolve]] sweeps the deadlocked machinery. Only
-    * reachable when substitution made no progress, so acyclic plans
-    * never take this path; exactness is [[SeqCycleEval]]'s (VM
-    * per-line/per-site order), only parallelism is surrendered — and
-    * the alternative was a crash on a legal program.
+    * registrations can deadlock at the MACHINERY level — as-of/kpfx
+    * relations whose columns reference each other in a loop. The loop
+    * is real because the conservative line-abort guard terms make a
+    * site's COMPILED cond read metrics its IR never mentions, so
+    * [[seqCyclicMetrics]]' deliberately-IR-level graph misses the
+    * cycle (found by fuzz seed 5816: two keyed as-of relations
+    * mutually tangled through abort guards). Re-detect cycles on the
+    * compiled read graph — metric-level edges through every `__mrd`
+    * ref of every site cond, mapped back via [[readNameMetric]] — and
+    * replay that group exactly; if the tangle still stalls, escalate
+    * to replaying EVERY metric with a pending read, after which the
+    * orphan-GC in [[trySeqCycleResolve]] sweeps the deadlocked
+    * machinery. Only reachable when nothing else is ready, so acyclic
+    * plans never take this path; exactness is [[SeqCycleEval]]'s (VM
+    * per-line/per-site order), only parallelism is surrendered.
+    *
+    * A group holding a PREMIXED read — one that already materialized
+    * through the distributed machinery and is either consumed by
+    * materialized machinery or no longer available — is refused:
+    * replaying around it would mix semantics, so the plan build fails
+    * instead. (An unconsumed materialized read is not premixed:
+    * [[trySeqCycleResolve]] reclaims it exactly.)
     */
   private def lastResortSeqResolve(avail: Set[String]): Boolean = {
     def deps(m: String): Set[String] =
@@ -1035,43 +788,18 @@ final class PlanBuilder(program: Ir.Program, lines: DataFrame,
         d == m || (seen.add(d) && go(d)))
       go(m)
     }
-    // leniency the primary path refuses: a read of a group metric may
-    // ALREADY have materialized through the distributed machinery
-    // (registered before the cycle was observable — seed 6006's
-    // directly self-conditioned gauge, read earlier at value sites).
-    // trySeqCycleResolve RECLAIMS such a read when nothing
-    // materialized consumed its column (drop + replay + re-emit under
-    // the name); only a CONSUMED one keeps its distributed column,
-    // and replaying around it mixes semantics for that corner — but
-    // the strict all-or-nothing check here would crash on a legal
-    // program.
-    def feasible(g: Set[String]): Boolean = g.nonEmpty &&
-      seqReadInfo.exists { case (n, i) =>
-        g(i.metric) && pending.contains(n) }
-    // audited attempt: the replay itself is SeqCycleEval-exact, and a
-    // premixed read that nothing consumed is reclaimed exactly — only
-    // the CONSUMED corner (a group read whose materialized column is
-    // baked into other materialized machinery) mixes semantics.
-    // Record that, and record the escalation to replaying every
-    // read-bearing metric
-    def attempt(g: Set[String], label: String): Boolean = {
-      if (!feasible(g)) return false
-      val premixed = seqReadInfo.collect {
-        case (n, i) if g(i.metric) && !pending.contains(n) &&
-          (consumedRefs(n) || !avail(n)) => n
-      }.toSeq.sorted
-      val ok = trySeqCycleResolve(g, avail)
-      if (ok && premixed.nonEmpty)
-        noteApprox(s"$label replay of group " +
-          s"${g.toSeq.sorted.mkString(",")}: reads " +
-          s"${premixed.mkString(",")} had already materialized " +
-          "distributed AND were consumed by materialized machinery; " +
-          "they keep their columns while the remaining reads replay " +
-          "exactly (mixed-semantics corner)")
-      ok
-    }
-    attempt(cyclic, "last-resort") ||
-      (cyclic != all && attempt(all, "last-resort-all-metrics"))
+    // unlike [[seqCyclicMetrics]], a group may hold reads that are
+    // no longer pending: reclaimable ones replay exactly, premixed
+    // ones refuse the group
+    def attempt(g: Set[String]): Boolean =
+      g.nonEmpty &&
+        seqReadInfo.exists { case (n, i) =>
+          g(i.metric) && pending.contains(n) } &&
+        !seqReadInfo.exists { case (n, i) =>
+          g(i.metric) && !pending.contains(n) &&
+            (consumedRefs(n) || !avail(n)) } &&
+        trySeqCycleResolve(g, avail)
+    attempt(cyclic) || (cyclic != all && attempt(all))
   }
 
   /** EXACT resolution of a stalled self/mutual-reference cycle —
@@ -1079,8 +807,8 @@ final class PlanBuilder(program: Ir.Program, lines: DataFrame,
     * machine over the [[seqCyclicMetrics]] group. Returns true if it
     * resolved the group's reads (the flush loop retries with the
     * joined columns); false means the group's residual inputs are not
-    * materialized yet (wait) or analysis failed (the caller falls
-    * back to the provisional one-level-unroll substitution).
+    * materialized yet (wait) or analysis failed — the caller then tries
+    * [[lastResortSeqResolve]] and otherwise fails the plan build.
     */
   private def trySeqCycleResolve(metrics: Set[String],
       avail: Set[String]): Boolean = {
@@ -1097,8 +825,8 @@ final class PlanBuilder(program: Ir.Program, lines: DataFrame,
     // every still-pending consumer resolves by name at its own
     // materialization and picks up the replacement. A CONSUMED read
     // keeps its column (its values are baked into materialized plan
-    // nodes; replacing the column cannot retro-fix those) — that is
-    // the declared mixed-semantics corner in [[lastResortSeqResolve]].
+    // nodes; replacing the column cannot retro-fix those), and
+    // [[lastResortSeqResolve]] refuses a group holding one.
     val replacedNames = seqReadInfo.collect {
       case (n, i) if metrics(i.metric) && !pending.contains(n) &&
         avail(n) && !consumedRefs(n) => n
@@ -1171,8 +899,8 @@ final class PlanBuilder(program: Ir.Program, lines: DataFrame,
     readNames.foreach { n => pending.remove(n); seqReadInfo.remove(n) }
     // GC: internal registrations (probe relations, prefix offsets,
     // carried-state joins) reachable only from the replaced read
-    // impls are orphans — materializing them would run the very
-    // sequential provisional machinery the exact path replaced. Site
+    // impls are orphans — materializing them would run distributed
+    // machinery whose result nothing reads any more. Site
     // conds and aggregation branches reference only __mrd/__m names,
     // so the internal prefixes are safe to collect by reference
     // count. The kpfx/koff memo (readMemo) is purged for the resolved
@@ -2780,21 +2508,20 @@ final class PlanBuilder(program: Ir.Program, lines: DataFrame,
       s"expected string literal, got $other")
   }
 
-  /** Cross-line metric read: running last-written value for this key. */
-  /** Cross-pass DEFERRED binding for every metric read: the memo
-    * wrapper returns a CONTENT-NAMED column (stableName over the
-    * read's memo key). In pass 2 the name binds to the impl result
-    * compiled against the FULL site list; in pass 1 it binds to
-    * nothing yet — the pass-1 impl result (pass-1-visible sites only,
-    * the historical frozen semantic) is stored as the PROVISIONAL and
-    * used only as the substitution bottom for genuine self/mutual
-    * reference cycles (see the flushPending fallback). Effect: a
-    * frozen pass-1 cond that reads ANY metric — keyless or keyed,
-    * window, as-of or fold branch — resolves to the exact
-    * full-visibility read, including write sites that appear LATER in
-    * program text (pre-r15 those were frozen at pass-1 visibility:
-    * reading a metric whose write cond read a later-written keyless
-    * metric silently returned zero).
+  /** Cross-line metric read: running last-written value for this key.
+    *
+    * Cross-pass DEFERRED binding: the memo wrapper returns a
+    * CONTENT-NAMED column (stableName over the read's memo key). In
+    * pass 2 the name binds to the impl result compiled against the
+    * FULL site list; in pass 1 the impl is compiled and discarded, and
+    * the name stays unbound until pass 2 registers it. Effect: a frozen
+    * pass-1 cond that reads ANY metric — keyless or keyed, window,
+    * as-of or fold branch — resolves to the exact full-visibility read,
+    * including write sites that appear LATER in program text (pre-r15
+    * those were frozen at pass-1 visibility: reading a metric whose
+    * write cond read a later-written keyless metric silently returned
+    * zero). A read that waits on itself resolves through the exact
+    * cycle machinery in the flush loop, or the plan build fails.
     */
   private def metricReadColumn(metric: String, keys: Seq[Expr],
       frames: List[Frame], tReg: Column, siteIdx: Int,
@@ -2817,8 +2544,7 @@ final class PlanBuilder(program: Ir.Program, lines: DataFrame,
           readNameMetric(name) = metric
           val impl = metricReadColumnImpl(metric, keys, frames, tReg,
             siteIdx, reading, memoKey.toString)
-          if (resolvedSites.isEmpty) { kpfxProvisional(name) = impl }
-          else {
+          if (resolvedSites.nonEmpty) {
             pending(name) = impl
             seqReadInfo(name) =
               SeqReadInfo(metric, siteIdx, keys, frames, tReg, reading)

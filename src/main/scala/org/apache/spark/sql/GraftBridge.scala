@@ -42,7 +42,8 @@ object GraftBridge {
     * sequential cycle evaluator: the analyzer supplies function
     * resolution and type coercion so the evaluator never re-implements
     * Catalyst operator semantics. Throws on any unexpected plan shape
-    * (callers fall back to the provisional path).
+    * (the cycle resolution then reports failure, and the plan build
+    * fails unless another exact resolution applies).
     */
   def bindForEval(spark: SparkSession, schema: StructType,
       cols: Seq[Column]): Seq[Expression] = {

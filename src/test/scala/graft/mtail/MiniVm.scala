@@ -11,8 +11,8 @@ import graft.mtail.Ir._
   * exactly like `PlanBuilder.snapshot()`. It is the INDEPENDENT
   * oracle of [[graft.streaming.VmDifferentialSpec]]: the engine's
   * distributed plans must agree with this interpreter on every fuzz
-  * program, or declare the approximation loudly
-  * (`PlanBuilder.approxNotes`).
+  * program (a plan the engine cannot make VM-exact fails to build,
+  * which fails the net too).
   *
   * Coverage is the fuzz pool plus the directed-spec corpus — the
   * constructs of [[graft.streaming.FuzzPool]] (conds, otherwise/else,

@@ -3,13 +3,11 @@ package graft.plan
 import graft.SparkSpec
 import graft.mtail.{Frontend, LogLines, MiniVm, Snapshot}
 
-/** SCRATCH probe (round 18 order #5): hunt for a declared
-  * approximation that actually returns a non-VM value. The candidate
-  * shape is abort-mediated self-dependence with NON-absorbing
-  * dynamics: `int(hid0)` aborts iff hid0 currently holds a word, the
-  * abort gates hid0's own rewrite on the same line, and a separate
-  * reset line flips hid0 back to numeric — so the abort alternates
-  * with history instead of absorbing.
+/** Abort-mediated self-dependence with NON-absorbing dynamics:
+  * `int(hid0)` aborts iff hid0 currently holds a word, the abort gates
+  * hid0's own rewrite on the same line, and a separate reset line
+  * flips hid0 back to numeric — so the abort alternates with history
+  * instead of absorbing. The engine must match [[MiniVm]] exactly.
   */
 class AbortCycleProbe extends SparkSpec {
   import spark.implicits._
@@ -40,10 +38,6 @@ class AbortCycleProbe extends SparkSpec {
       LogLines.fromLines(lines.toDF("line"), "line"), 2020)
     val engine = norm(Snapshot.collect(pb.snapshot()))
     val vm = norm(MiniVm.run(prog, lines))
-    System.err.println(s"[probe] approxNotes=${pb.approxNotes.toList}")
-    System.err.println(s"[probe] engine=$engine")
-    System.err.println(s"[probe] vm    =$vm")
-    assert(engine == vm || pb.approxNotes.nonEmpty,
-      "SILENT divergence — would fail the round-17 contract")
+    assert(engine == vm, s"engine=$engine vm=$vm")
   }
 }

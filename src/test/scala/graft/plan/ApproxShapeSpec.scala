@@ -22,10 +22,7 @@ import graft.mtail.{Frontend, LogLines, MiniVm, Snapshot}
   * for. The fix put abort-mediated read edges on the cycle graph
   * (PlanBuilder.abortOn accumulates stopGuardReads; own-abort reads
   * join Site.condReads), so these cycles route through the EXACT
-  * sequential automaton. The pins now assert the STRONGER contract:
-  * every historical tangle resolves VM-exactly with an EMPTY audit
-  * trail. If one starts declaring again, a machinery change pushed it
-  * back to the unroll — investigate, never just repin.
+  * sequential automaton.
   *
   * Round 19 FROZE the pinned programs ([[ApproxPinFixtures]]): the
   * generator is not stable under pool evolution (adding one leaf
@@ -36,8 +33,9 @@ import graft.mtail.{Frontend, LogLines, MiniVm, Snapshot}
   * replay reclaims a group read that materialized through the
   * distributed machinery before the cycle was observable (when
   * nothing materialized consumed its column), so every frozen
-  * tangle — including the former declared survivors — now resolves
-  * VM-exactly with an empty audit trail.
+  * tangle — including the former declared survivors — resolves
+  * VM-exactly. The planner is exact or fails the plan build, so each
+  * pin asserts `engine == vm`.
   *
   * The broad net behind these pins is
   * [[graft.streaming.VmDifferentialSpec]]; the biased hunt that found
@@ -50,46 +48,15 @@ class ApproxShapeSpec extends SparkSpec {
     cells.map(c => (c.name, c.labels) ->
       ((c.kind, c.value, c.tsSec.getOrElse(0L), c.buckets))).toMap
 
-  // 60150 joined in r19's second pass: the splice-order fix (genuine
-  // cycle edges get the exact compiled-graph replay BEFORE any
-  // declared unroll) resolves its whole tangle through SeqCycleEval —
-  // its former notes were two fence-stall surrenders plus nine splices.
-  // 4467/4788 and the hunt survivors (60100/60148/60243) joined in
-  // r19's third pass: their one remaining note was the mixed-semantics
-  // corner (one read per group had already materialized through the
-  // distributed machinery before the cycle was observable), and the
-  // replay now RECLAIMS an unconsumed premixed read — drop the stale
-  // column, compute it in the automaton, re-emit under the name — so
-  // the whole group resolves VM-exactly with an empty audit trail.
-  // Only a premixed read CONSUMED by already-materialized machinery
-  // still declares; no known program reaches that corner (the
-  // declared-survivor list below is empty — the loop stays so any
-  // future sweep survivor lands back on the two-part contract).
+  // 60150 joined in r19's second pass, when genuine cycle edges got
+  // the exact compiled-graph replay before any unroll; 4467/4788 and
+  // the hunt survivors (60100/60148/60243) joined in r19's third
+  // pass, when the replay learned to RECLAIM a group read that had
+  // already materialized through the distributed machinery (drop the
+  // stale column, compute it in the automaton, re-emit under the name)
   private val exactSeeds =
     Seq(5816, 5824, 5872, 5993, 6006, 6012, 6048, 6080, 6081, 60150,
       4467, 4788) ++ ApproxPinFixtures.huntSurvivors
-
-  private val declaredSeeds = Seq.empty[Int]
-
-  declaredSeeds.foreach { seed =>
-    test(s"frozen tangle $seed: surviving declared shape is loud and " +
-        "VM-exact") {
-      val (src, lines) = ApproxPinFixtures.pins(seed)
-      val prog = Frontend.parse(src, s"approx.$seed")
-      val pb = new PlanBuilder(prog,
-        LogLines.fromLines(lines.toDF("line"), "line"), 2020)
-      val engine = norm(Snapshot.collect(pb.snapshot()))
-      assert(pb.approxNotes.nonEmpty,
-        s"tangle $seed no longer declares — the shape resolved " +
-          "exactly; move it to exactSeeds")
-      val vm = norm(MiniVm.run(prog, lines))
-      assert(engine == vm,
-        s"""tangle $seed diverged under declared notes:
-           |${pb.approxNotes.mkString("\n")}
-           |--- program:
-           |$src""".stripMargin)
-    }
-  }
 
   exactSeeds.foreach { seed =>
     test(s"frozen tangle $seed: historically-approximated shape now " +
@@ -101,11 +68,9 @@ class ApproxShapeSpec extends SparkSpec {
       val engine = norm(Snapshot.collect(pb.snapshot()))
       val vm = norm(MiniVm.run(prog, lines))
       assert(engine == vm,
-        s"""tangle $seed diverged from the VM (notes: ${pb.approxNotes.toList})
+        s"""tangle $seed diverged from the VM
            |--- program:
            |$src""".stripMargin)
-      assert(pb.approxNotes.isEmpty,
-        s"tangle $seed surrendered exactness again: ${pb.approxNotes.toList}")
     }
   }
 }

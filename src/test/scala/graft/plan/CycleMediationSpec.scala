@@ -17,9 +17,10 @@ import graft.mtail.{Frontend, LogLines, MiniVm, Snapshot}
   * ([[SeqCycleEval]] binds state names inside key/cond/value
   * expressions — including probe keys reading cycle state).
   *
-  * Every case here is asserted VM-exact against [[MiniVm]] AND
-  * approximation-free (empty audit trail); the first also pins the
-  * hand-computed store so a MiniVm bug cannot mask an engine one.
+  * Every case here is asserted VM-exact against [[MiniVm]] (a plan
+  * the engine cannot make exact fails to build, which fails the
+  * test); the first also pins the hand-computed store so a MiniVm bug
+  * cannot mask an engine one.
   */
 class CycleMediationSpec extends SparkSpec {
   import spark.implicits._
@@ -27,9 +28,9 @@ class CycleMediationSpec extends SparkSpec {
   private val lines = Seq(
     "A 3 foo", "B 5 bar", "A 7 foo", "B 2 baz", "A 4 bar", "B 9 foo")
 
-  private def run(src: String): (Map[(String, Map[String, String]),
-      (String, Any)], Map[(String, Map[String, String]), (String, Any)],
-      Seq[String]) = {
+  private type Store = Map[(String, Map[String, String]), (String, Any)]
+
+  private def run(src: String): (Store, Store) = {
     val prog = Frontend.parse(src, "cyclemed.mtail")
     val pb = new PlanBuilder(prog,
       LogLines.fromLines(lines.toDF("line"), "line"), 2020)
@@ -37,12 +38,12 @@ class CycleMediationSpec extends SparkSpec {
       .map(c => (c.name, c.labels) -> (c.kind, c.value)).toMap
     val vm = MiniVm.run(prog, lines)
       .map(c => (c.name, c.labels) -> (c.kind, c.value)).toMap
-    (engine, vm, pb.approxNotes.toSeq)
+    (engine, vm)
   }
 
   test("value-mediated mutual cycle (a = b + 1; b = a % 3) is " +
       "VM-exact with an empty audit trail") {
-    val (engine, vm, notes) = run(
+    val (engine, vm) = run(
       """hidden gauge hid0
         |hidden gauge hid1 by p, q
         |counter c0
@@ -54,7 +55,6 @@ class CycleMediationSpec extends SparkSpec {
         |c0 += hid0
         |}
         |""".stripMargin)
-    assert(notes.isEmpty, notes)
     assert(engine == vm, s"engine=$engine vm=$vm")
     // hand walk: A foo→hid0=0+1=1 · B bar→hid1[w,bar]=1%3=1, c0+=1
     // · A foo→hid0=hid1[w,foo]+1=0+1=1 · B baz→hid1[w,baz]=1, c0+=1
@@ -63,7 +63,7 @@ class CycleMediationSpec extends SparkSpec {
   }
 
   test("key-mediated self cycle (hid0 = m[string(hid0)]) is VM-exact") {
-    val (engine, vm, notes) = run(
+    val (engine, vm) = run(
       """hidden gauge hid0
         |hidden counter hidc1 by a
         |counter c0
@@ -75,13 +75,12 @@ class CycleMediationSpec extends SparkSpec {
         |c0 += hid0
         |}
         |""".stripMargin)
-    assert(notes.isEmpty, notes)
     assert(engine == vm, s"engine=$engine vm=$vm")
   }
 
   test("key-mediated mutual cycle (write key reads the metric the " +
       "other side reads back) is VM-exact") {
-    val (engine, vm, notes) = run(
+    val (engine, vm) = run(
       """hidden gauge hid0
         |hidden gauge hid1 by p, q
         |counter c0
@@ -93,13 +92,12 @@ class CycleMediationSpec extends SparkSpec {
         |c0 += hid0
         |}
         |""".stripMargin)
-    assert(notes.isEmpty, notes)
     assert(engine == vm, s"engine=$engine vm=$vm")
   }
 
   test("cond-mediated cycle whose cond READ probes a key derived " +
       "from the cycle metric is VM-exact") {
-    val (engine, vm, notes) = run(
+    val (engine, vm) = run(
       """hidden gauge hid0
         |hidden counter hidc1 by a
         |counter c0
@@ -109,13 +107,12 @@ class CycleMediationSpec extends SparkSpec {
         |c0 += hid0
         |}
         |""".stripMargin)
-    assert(notes.isEmpty, notes)
     assert(engine == vm, s"engine=$engine vm=$vm")
   }
 
   test("three-metric chain with consumed early read (c1 += hidc; " +
       "hid1 ← hidc; hid0 ← hid1; hidc gated by hid0) is VM-exact") {
-    val (engine, vm, notes) = run(
+    val (engine, vm) = run(
       """hidden gauge hid0
         |hidden gauge hid1 by p, q
         |hidden counter hidc
@@ -131,7 +128,6 @@ class CycleMediationSpec extends SparkSpec {
         |hid0 > 0 { hidc++ }
         |}
         |""".stripMargin)
-    assert(notes.isEmpty, notes)
     assert(engine == vm, s"engine=$engine vm=$vm")
   }
 }

@@ -245,7 +245,6 @@ class DelAfterSpec extends SparkSpec {
     val vm = MiniVm.run(prog, lines).map(c => (c.name, c.labels) -> c.value)
       .toMap
     assert(eng == vm, s"engine $eng vs vm $vm")
-    assert(pb.approxNotes.isEmpty, pb.approxNotes)
     // omega (first line) and zeta abort; omega's x=7 read creates it
     assert(eng(("ok", Map.empty)) == VInt(6))
     assert(eng(("zero", Map.empty)) == VInt(2))

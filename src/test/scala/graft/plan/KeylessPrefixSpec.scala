@@ -147,9 +147,9 @@ class KeylessPrefixSpec extends SparkSpec {
       "composes across buckets — the mysql partial-reset idiom") {
     // `partial == 1 { partial = 0 }`: the write's own condition reads
     // the metric being written. The cond is compiled in pass 1 and
-    // frozen; if the pass-1 provisional read were bucket-local, the
-    // cond would lose all cross-bucket state (mark in bucket 0, reset
-    // in bucket 1 never fires).
+    // frozen; if the read it captures were bucket-local, the cond
+    // would lose all cross-bucket state (mark in bucket 0, reset in
+    // bucket 1 never fires).
     val src =
       """hidden gauge partial
         |counter resets
@@ -207,8 +207,8 @@ class KeylessPrefixSpec extends SparkSpec {
   test("mutually-referencing keyless conds compile and fold " +
       "deterministically (no circular materialization)") {
     // a's write cond reads b; b's write cond reads a — the name-based
-    // pass-1 references form a cycle that the flush must bottom out
-    // with the pass-1 provisional, not crash on
+    // pass-1 references form a cycle that the flush must resolve
+    // exactly through the sequential walk, not crash on
     val src =
       """counter done
         |hidden gauge a
@@ -232,9 +232,9 @@ class KeylessPrefixSpec extends SparkSpec {
   test("DUPLICATE self-conditioned blocks compile: the provisional " +
       "may already sit in the lazy join's snapshot (soak iter 772)") {
     // two identical `hid0 == 1 { hid0 = 0 }` blocks give two read
-    // sites whose cycle-substituted provisional can materialize into
-    // the line frame BETWEEN the fallback's substitution and the lazy
-    // offsets-join build — re-adding it made the reference ambiguous.
+    // sites of one cyclic metric (soak iteration 772 once crashed here
+    // with an ambiguous reference); both must resolve through the
+    // sequential walk.
     val src =
       """counter c0
         |hidden gauge hid0

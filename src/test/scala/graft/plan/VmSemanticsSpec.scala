@@ -583,9 +583,8 @@ class VmSemanticsSpec extends SparkSpec {
     // `a` line sees h == 1, resets and counts. a(h=0,no) b(h=1)
     // a(reset,c=1) b(h=1) a(reset,c=2). Pre-r16 the one-level-unroll
     // bottom froze the reset's cond at pass-1 visibility and yielded
-    // c = 1; that approximation now survives only for shapes the
-    // automaton declines — residual inputs stuck behind other
-    // unresolved machinery (documented fallback). One-shot ≡
+    // c = 1; a shape the automaton cannot resolve now fails the plan
+    // build instead of approximating. One-shot ≡
     // batch-split is enforced by the equivalence fuzz, whose pool
     // carries this shape.
     val cells = run(

@@ -6,34 +6,22 @@ import graft.SparkSpec
 import graft.mtail.{Frontend, LogLines, MiniVm, Snapshot}
 import graft.plan.PlanBuilder
 
-/** Round-18 approximation hunt (verdict order #5): every pinned
-  * `approxNotes` activation so far is VM-exact because it lands in
-  * the one-level unroll's absorbing corner. This sweep BIASES the
-  * generator toward the family most likely to escape that corner —
-  * abort-mediated self-dependence with non-absorbing (reset-flipped)
-  * dynamics, mixed with machinery-fenced cycle residuals
-  * ([[FuzzPool.genProgramAbort]]) — hunting for a program where a
-  * DECLARED approximation actually returns a non-VM value.
+/** Biased abort-cycle sweep: the generator leans toward the family
+  * most likely to defeat exact cycle resolution — abort-mediated
+  * self-dependence with non-absorbing (reset-flipped) dynamics, mixed
+  * with machinery-fenced cycle residuals
+  * ([[FuzzPool.genProgramAbort]]). Every accepted program must build a
+  * plan and match [[MiniVm]] exactly; the planner is exact or fails the
+  * plan build, so a divergence or a crash fails the sweep with program
+  * + seed.
   *
-  * Outcomes per seed:
-  *  - silent divergence (no notes) → FAIL, same as VmDifferentialSpec;
-  *  - declared + deviating → reported loudly; such a seed is the
-  *    trigger to either route the shape through SeqCycleEval or pin
-  *    the deviation as a documented contract;
-  *  - declared + VM-exact → counted (the absorbing-corner evidence).
-  *
-  * History: this sweep's SECOND seed (60002) caught a silent
-  * divergence on day one — not an unroll deviation but the
-  * order-sensitive metric-typing gap (engine exported VStr("42.0")
-  * where the reference keeps an Int and S2i-coerces; see
+  * History: this sweep's SECOND seed (60002) caught a divergence on
+  * day one — the order-sensitive metric-typing gap (engine exported
+  * VStr("42.0") where the reference keeps an Int and S2i-coerces; see
   * [[graft.mtail.TypeInfer]] and [[graft.plan.TypePinSpec]]). The
-  * typing fix then made pinned seed 6080's tangle non-absorbing and
-  * its DECLARED unroll value-wrong — resolved by putting
-  * abort-mediated read edges on the cycle graph so the exact
-  * automaton owns those cycles (PlanBuilder.abortOn). Post-fix the
-  * sweep runs clean: 0 deviating, 0 declared on the biased shapes.
-  * The declaration machinery stays: it is the tripwire that makes a
-  * future genuinely-deviating shape loud instead of silent.
+  * typing fix then made pinned seed 6080's tangle non-absorbing,
+  * resolved by putting abort-mediated read edges on the cycle graph so
+  * the exact automaton owns those cycles (PlanBuilder.abortOn).
   */
 class ApproxHuntSpec extends SparkSpec {
   import spark.implicits._
@@ -51,8 +39,6 @@ class ApproxHuntSpec extends SparkSpec {
     val base = sys.env.getOrElse("SPARK_GRAFT_APPROX_HUNT_SEED_BASE",
       "60000").toInt
     var checked = 0
-    var declaredExact = List.empty[Int]
-    var declaredDeviating = List.empty[Int]
     (1 to iters).foreach { i =>
       if (i % 50 == 0)
         System.err.println(s"[approx-hunt] iteration $i/$iters")
@@ -66,20 +52,8 @@ class ApproxHuntSpec extends SparkSpec {
         val engine = norm(Snapshot.collect(pb.snapshot()))
         val vm = norm(MiniVm.run(prog, lines))
         checked += 1
-        if (pb.approxNotes.nonEmpty) {
-          if (engine == vm) declaredExact ::= base + i
-          else {
-            declaredDeviating ::= base + i
-            System.err.println(
-              s"""[approx-hunt] seed ${base + i} DECLARED AND DEVIATING:
-                 |  ${pb.approxNotes.mkString("\n  ")}
-                 |engine only: ${(engine.toSet -- vm.toSet).toSeq.sortBy(_._1.toString).take(4)}
-                 |vm only: ${(vm.toSet -- engine.toSet).toSeq.sortBy(_._1.toString).take(4)}
-                 |--- program:
-                 |$src""".stripMargin)
-          }
-        } else if (engine != vm) fail(
-          s"""seed ${base + i} SILENTLY diverged (no approxNotes)
+        if (engine != vm) fail(
+          s"""seed ${base + i} diverged from the VM
              |engine only: ${(engine.toSet -- vm.toSet).toSeq.sortBy(_._1.toString).take(6)}
              |vm only: ${(vm.toSet -- engine.toSet).toSeq.sortBy(_._1.toString).take(6)}
              |--- program:
@@ -91,14 +65,7 @@ class ApproxHuntSpec extends SparkSpec {
       }
       }
     }
-    System.err.println(s"[approx-hunt] $checked/$iters checked; " +
-      s"${declaredExact.size} declared-but-VM-exact" +
-      (if (declaredExact.nonEmpty)
-        s" (seeds ${declaredExact.sorted.take(20).mkString(",")})"
-      else "") +
-      s"; ${declaredDeviating.size} DECLARED-AND-DEVIATING" +
-      (if (declaredDeviating.nonEmpty)
-        s" (seeds ${declaredDeviating.sorted.mkString(",")})" else ""))
+    System.err.println(s"[approx-hunt] $checked/$iters checked")
     assert(checked >= iters / 2,
       s"only $checked/$iters accepted — the biased pool is rejecting")
   }

@@ -342,15 +342,14 @@ object FuzzPool {
     usedDecls + body + "\n"
   }
 
-  /** Round-18 approximation-hunt leaf set: biased toward
+  /** Round-18 abort-cycle hunt leaf set: biased toward
     * ABORT-MEDIATED SELF-DEPENDENCE (a conversion abort on a metric's
-    * own read gating that metric's write — the one cycle family the
-    * sequential automaton deliberately leaves on the one-level-unroll
-    * bottom, PlanBuilder Site.condReads scaladoc) and machinery-fenced
-    * residuals (cycle leaves from the primary pool mixed with
-    * abort-capable reads). Goal: surface a program where a DECLARED
-    * approximation returns a non-VM value ([[ApproxHuntSpec]]) — or
-    * build evidence that every reachable declared shape is VM-exact.
+    * own read gating that metric's write — the cycle family that
+    * reaches the automaton only through abort edges, PlanBuilder
+    * Site.condReads scaladoc) and machinery-fenced residuals (cycle
+    * leaves from the primary pool mixed with abort-capable reads).
+    * Goal: surface a program the planner resolves to a non-VM value
+    * or fails to build ([[ApproxHuntSpec]]).
     * String-typed hidden state (`hids`, `hids1`) makes `int(...)` /
     * implicit conversions abort history-dependently: words abort,
     * digit-strings don't, and reset arms flip between them so the

@@ -53,13 +53,14 @@ class StreamEquivalenceSpec extends SparkSpec {
     // it to explore fresh seeds without re-running known-green ones
     val base = sys.env.getOrElse("SPARK_GRAFT_FUZZ_SEED_BASE", "4200")
       .toInt
+    var checked = 0
     (1 to iters).foreach { i =>
       // soak progress lands on stderr so an interrupted long sweep
       // still shows how far it got (the suite only reports at the end)
       if (i % 50 == 0) System.err.println(s"[fuzz] iteration $i/$iters")
       val rnd = new Random(base + i)
       val src = FuzzPool.genProgram(rnd)
-      try runOne(i, rnd, src)
+      try if (runOne(i, rnd, src)) checked += 1
       catch {
         case e: org.scalatest.exceptions.TestFailedException => throw e
         // checker rejections are skipped inside runOne; anything
@@ -70,6 +71,8 @@ class StreamEquivalenceSpec extends SparkSpec {
           s"iteration $i crashed: ${e.getMessage}\n--- program:\n$src", e)
       }
     }
+    assert(checked >= iters / 2,
+      s"only $checked/$iters programs accepted — the pool is rejecting")
   }
 
   test("EXTENDED pool over any batch split equals the one-shot run " +
@@ -77,12 +80,13 @@ class StreamEquivalenceSpec extends SparkSpec {
     val iters = sys.env.getOrElse("SPARK_GRAFT_FUZZ_EXT_ITERS", "25")
       .toInt
     val base = 20000 // leafExt's own seed space (see FuzzPool.leafExt)
+    var checked = 0
     (1 to iters).foreach { i =>
       if (i % 50 == 0)
         System.err.println(s"[fuzz-ext] iteration $i/$iters")
       val rnd = new Random(base + i)
       val src = FuzzPool.genProgram(rnd, FuzzPool.leafExt)
-      try runOne(i, rnd, src)
+      try if (runOne(i, rnd, src)) checked += 1
       catch {
         case e: org.scalatest.exceptions.TestFailedException => throw e
         case e: Throwable => fail(
@@ -90,13 +94,16 @@ class StreamEquivalenceSpec extends SparkSpec {
           e)
       }
     }
+    assert(checked >= iters / 2,
+      s"only $checked/$iters programs accepted — the pool is rejecting")
   }
 
-  private def runOne(i: Int, rnd: Random, src: String): Unit = {
+  /** false when the checker rejected the program (skipped). */
+  private def runOne(i: Int, rnd: Random, src: String): Boolean = {
       // checker rejections skip; an engine exception AFTER acceptance
       // fails the sweep (see FuzzPool.parseAccepted)
       val prog = FuzzPool.parseAccepted(src, "eq.mtail")
-        .getOrElse(return)
+        .getOrElse(return false)
       val lines = FuzzPool.genLines(rnd)
 
       val oneShot = norm(Snapshot.collect(new PlanBuilder(prog,
@@ -121,6 +128,7 @@ class StreamEquivalenceSpec extends SparkSpec {
            |streamed only: ${(streamed.toSet -- oneShot.toSet).toSeq.sortBy(_._1.toString)}
            |--- program:
            |$src""".stripMargin)
+      true
   }
 
   test("a later batch's settime may move a datum stamp BACKWARDS " +

@@ -9,24 +9,19 @@ import graft.plan.PlanBuilder
 /** VM-differential fuzz: the engine's one-shot distributed plan must
   * produce EXACTLY the reference VM's store — as computed by the
   * independent sequential interpreter [[graft.mtail.MiniVm]] — on
-  * every random program of the shared [[FuzzPool]], unless the plan
-  * LOUDLY declared an approximation (`PlanBuilder.approxNotes`, the
-  * round-17 no-silent-deviation contract).
+  * every random program of the shared [[FuzzPool]]. The planner is
+  * exact or fails the plan build, so any divergence, and any crash on
+  * a checker-legal program, fails the suite with program + seed.
   *
   * This is a different net than [[StreamEquivalenceSpec]]: that one
   * proves one-shot ≡ any batch split (self-consistency), this one
   * proves one-shot ≡ VM semantics (external correctness). A bug that
-  * deviates from the VM identically in both modes — exactly what the
-  * surviving one-level-unroll shapes would produce — passes the
+  * deviates from the VM identically in both modes passes the
   * equivalence net and is caught only here.
   *
-  * Any divergence WITH a non-empty approxNotes trail is tolerated and
-  * reported to stderr (the engine said so itself); a divergence with
-  * an EMPTY trail fails the suite with program + seed. A run's
-  * summary line reports how many programs declared approximations —
-  * expected ≈ 0 out of the default sweep (the shapes are rare
-  * fuzz-tangles; see the directed cases in
-  * [[graft.plan.SeqCycleSpec]]).
+  * Each sweep asserts that at least half of its programs passed the
+  * checker, so a pool that starts rejecting cannot shrink the net
+  * silently.
   */
 class VmDifferentialSpec extends SparkSpec {
   import spark.implicits._
@@ -43,12 +38,6 @@ class VmDifferentialSpec extends SparkSpec {
       sys.env.getOrElse("SPARK_GRAFT_FUZZ_ITERS", "25")).toInt
     val base = sys.env.getOrElse("SPARK_GRAFT_FUZZ_SEED_BASE", "4200")
       .toInt
-    var approxSeeds = List.empty[Int]
-    // seeds whose plan declared an approximation but still matched
-    // the VM exactly — the absorbing corner where the one-level
-    // unroll is value-exact; tracked so directed specs can pin the
-    // reachable shapes (r16 verdict order #2)
-    var notedExactSeeds = List.empty[Int]
     var checked = 0
     (1 to iters).foreach { i =>
       if (i % 50 == 0) System.err.println(s"[vmdiff] iteration $i/$iters")
@@ -62,21 +51,12 @@ class VmDifferentialSpec extends SparkSpec {
         val engine = norm(Snapshot.collect(pb.snapshot()))
         val vm = norm(MiniVm.run(prog, lines))
         checked += 1
-        if (engine == vm && pb.approxNotes.nonEmpty)
-          notedExactSeeds ::= base + i
-        if (engine != vm) {
-          if (pb.approxNotes.nonEmpty) {
-            approxSeeds ::= base + i
-            System.err.println(s"[vmdiff] seed ${base + i} diverged " +
-              s"UNDER DECLARED APPROXIMATION:\n  " +
-              pb.approxNotes.mkString("\n  "))
-          } else fail(
-            s"""iteration $i (seed ${base + i}) SILENTLY diverged from the VM
-               |engine only: ${(engine.toSet -- vm.toSet).toSeq.sortBy(_._1.toString).take(6)}
-               |vm only: ${(vm.toSet -- engine.toSet).toSeq.sortBy(_._1.toString).take(6)}
-               |--- program:
-               |$src""".stripMargin)
-        }
+        if (engine != vm) fail(
+          s"""iteration $i (seed ${base + i}) diverged from the VM
+             |engine only: ${(engine.toSet -- vm.toSet).toSeq.sortBy(_._1.toString).take(6)}
+             |vm only: ${(vm.toSet -- engine.toSet).toSeq.sortBy(_._1.toString).take(6)}
+             |--- program:
+             |$src""".stripMargin)
       } catch {
         case e: org.scalatest.exceptions.TestFailedException => throw e
         // checker rejections were already skipped by parseAccepted —
@@ -87,13 +67,9 @@ class VmDifferentialSpec extends SparkSpec {
       }
       }
     }
-    System.err.println(s"[vmdiff] $checked programs VM-checked, " +
-      s"${approxSeeds.size} diverged under declared approximation" +
-      (if (approxSeeds.nonEmpty) s" (seeds ${approxSeeds.sorted.mkString(",")})"
-       else "") +
-      s"; ${notedExactSeeds.size} declared-but-VM-exact" +
-      (if (notedExactSeeds.nonEmpty)
-        s" (seeds ${notedExactSeeds.sorted.mkString(",")})" else ""))
+    System.err.println(s"[vmdiff] $checked/$iters VM-checked")
+    assert(checked >= iters / 2,
+      s"only $checked/$iters programs accepted — the pool is rejecting")
   }
 
   test("R18 pool (del-after TTL hints, limit N, decorators, " +
@@ -108,14 +84,6 @@ class VmDifferentialSpec extends SparkSpec {
     val hit = scala.collection.mutable.Map(
       "after" -> 0, "limit" -> 0, "decorator" -> 0,
       "getfilename" -> 0)
-    // declared activations are frequent in THIS pool (TTL-del guards
-    // make the $ex$ existence companions cyclic, which routes whole
-    // groups through the last-resort replay) — track and REPORT their
-    // value-exactness like the primary sweep does, so a deviating
-    // declared shape is loud instead of silently tolerated (r19 gap:
-    // this test originally only policed silent divergence)
-    var declaredDiverged = List.empty[Int]
-    var declaredExact = List.empty[Int]
     (1 to iters).foreach { i =>
       if (i % 50 == 0)
         System.err.println(s"[vmdiff-r18] iteration $i/$iters")
@@ -134,20 +102,8 @@ class VmDifferentialSpec extends SparkSpec {
         if (src.contains("lim0")) hit("limit") += 1
         if (src.contains("@d0")) hit("decorator") += 1
         if (src.contains("getfilename")) hit("getfilename") += 1
-        if (engine == vm && pb.approxNotes.nonEmpty)
-          declaredExact ::= base + i
-        if (engine != vm && pb.approxNotes.nonEmpty) {
-          declaredDiverged ::= base + i
-          System.err.println(
-            s"""[vmdiff-r18] seed ${base + i} DECLARED AND DEVIATING:
-               |  ${pb.approxNotes.mkString("\n  ")}
-               |engine only: ${(engine.toSet -- vm.toSet).toSeq.sortBy(_._1.toString).take(4)}
-               |vm only: ${(vm.toSet -- engine.toSet).toSeq.sortBy(_._1.toString).take(4)}
-               |--- program:
-               |$src""".stripMargin)
-        }
-        if (engine != vm && pb.approxNotes.isEmpty) fail(
-          s"""r18 iteration $i (seed ${base + i}) SILENTLY diverged from the VM
+        if (engine != vm) fail(
+          s"""r18 iteration $i (seed ${base + i}) diverged from the VM
              |engine only: ${(engine.toSet -- vm.toSet).toSeq.sortBy(_._1.toString).take(6)}
              |vm only: ${(vm.toSet -- engine.toSet).toSeq.sortBy(_._1.toString).take(6)}
              |--- program:
@@ -161,11 +117,7 @@ class VmDifferentialSpec extends SparkSpec {
       }
     }
     System.err.println(s"[vmdiff-r18] $checked/$iters VM-checked; " +
-      s"construct hits: ${hit.toSeq.sorted.mkString(", ")}; " +
-      s"${declaredExact.size} declared-but-VM-exact; " +
-      s"${declaredDiverged.size} DECLARED-AND-DEVIATING" +
-      (if (declaredDiverged.nonEmpty)
-        s" (seeds ${declaredDiverged.sorted.mkString(",")})" else ""))
+      s"construct hits: ${hit.toSeq.sorted.mkString(", ")}")
     assert(checked >= iters / 2,
       s"only $checked/$iters programs accepted — the pool is rejecting")
     hit.foreach { case (k, n) => assert(n > 0,
@@ -178,6 +130,7 @@ class VmDifferentialSpec extends SparkSpec {
       .toInt
     val base = 20000 // own seed space: the primary pool's pinned
     // seed→program mappings stay untouched
+    var checked = 0
     (1 to iters).foreach { i =>
       if (i % 50 == 0)
         System.err.println(s"[vmdiff-ext] iteration $i/$iters")
@@ -189,9 +142,10 @@ class VmDifferentialSpec extends SparkSpec {
         val pb = new PlanBuilder(prog,
           LogLines.fromLines(lines.toDF("line"), "line"), 2020)
         val engine = norm(Snapshot.collect(pb.snapshot()))
-        val vm = norm(graft.mtail.MiniVm.run(prog, lines))
-        if (engine != vm && pb.approxNotes.isEmpty) fail(
-          s"""ext iteration $i (seed ${base + i}) SILENTLY diverged from the VM
+        val vm = norm(MiniVm.run(prog, lines))
+        checked += 1
+        if (engine != vm) fail(
+          s"""ext iteration $i (seed ${base + i}) diverged from the VM
              |engine only: ${(engine.toSet -- vm.toSet).toSeq.sortBy(_._1.toString).take(6)}
              |vm only: ${(vm.toSet -- engine.toSet).toSeq.sortBy(_._1.toString).take(6)}
              |--- program:
@@ -204,5 +158,8 @@ class VmDifferentialSpec extends SparkSpec {
       }
       }
     }
+    System.err.println(s"[vmdiff-ext] $checked/$iters VM-checked")
+    assert(checked >= iters / 2,
+      s"only $checked/$iters programs accepted — the pool is rejecting")
   }
 }
