@@ -91,7 +91,7 @@ object GraftFunctions {
       "minhash_sigs(text, n, k) - k minhash signatures over word " +
         "n-grams in one pass",
       exprs => { arity("minhash_sigs", exprs, 3)
-        MinHashSigs(exprs(0), litInt(exprs(1), "n"),
+        MinHashSigs(GramHashes(exprs(0), litInt(exprs(1), "n")),
           litInt(exprs(2), "k")) }),
     ("simhash_bands",
       "simhash_bands(text) - 4 x 16-bit simhash bands of the token " +

@@ -6,22 +6,23 @@ import org.apache.spark.sql.catalyst.expressions.{Expression,
   UnaryExpression, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext,
   ExprCode}
-import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
 
-/** `MinHashSigs(text, n, k)` — the document's full k-permutation
-  * MinHash signature in ONE pass: ARRAY<BIGINT> of length k, or NULL
-  * for a document with no n-grams (which the Column formulation
-  * dropped at its groupBy).
+/** `MinHashSigs(gramHashes, k)` — a document's full k-permutation
+  * MinHash signature from its distinct gram-hash array (as produced by
+  * [[GramHashes]]) in ONE pass: ARRAY<BIGINT> of length k, or NULL for
+  * an empty or NULL array (a document with no n-grams, which the
+  * Column formulation dropped at its groupBy). The SQL
+  * `minhash_sigs(text, n, k)` is `MinHashSigs(GramHashes(text, n), k)`.
   *
   * Replaces explode([[GramHashes]]) → groupBy(id).agg(k × min(
   * xxhash64(i, gh))): that shape shuffles one row per GRAM and runs k
   * min-aggregates per document, making signature generation the
-  * pipeline's widest shuffle. This node reuses [[GramHashes.compute]]
-  * for the gram hashes and folds the k minima in a tight loop —
-  * signatures now cost one map-side scan; the banded candidate join
-  * is the only shuffle left in minhashLshPairs.
+  * pipeline's widest shuffle. This node folds the k minima in a tight
+  * loop — signatures cost one map-side scan. Taking the gram-hash
+  * array rather than the text lets a caller that also needs the grams
+  * (minhashLshPairs' exact verify) tokenize and hash each document once.
   *
   * Hash parity: family member i of gram hash g is exactly Spark's
   * `xxhash64(lit(i), g)` — XXH64.hashLong(g, XXH64.hashInt(i, 42)) —
@@ -29,10 +30,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * therefore candidate sets and the oracle-checked output) are
   * bit-identical to the replaced formulation.
   */
-case class MinHashSigs(child: Expression, n: Int, k: Int)
+case class MinHashSigs(child: Expression, k: Int)
     extends UnaryExpression {
 
-  require(n >= 1 && k >= 1, "need n-gram size >= 1 and k >= 1")
+  require(k >= 1, "need k >= 1")
 
   override def dataType: DataType =
     ArrayType(LongType, containsNull = false)
@@ -42,7 +43,7 @@ case class MinHashSigs(child: Expression, n: Int, k: Int)
   override def eval(input: InternalRow): Any = {
     val v = child.eval(input)
     if (v == null) null
-    else MinHashSigs.compute(v.asInstanceOf[UTF8String].toString, n, k)
+    else MinHashSigs.compute(v.asInstanceOf[ArrayData], k)
   }
 
   override protected def withNewChildInternal(newChild: Expression)
@@ -52,7 +53,7 @@ case class MinHashSigs(child: Expression, n: Int, k: Int)
     val res = ctx.freshName("sigs")
     nullSafeCodeGen(ctx, ev, c =>
       s"""org.apache.spark.sql.catalyst.util.GenericArrayData $res =
-         |  graft.functions.MinHashSigs.compute($c.toString(), $n, $k);
+         |  graft.functions.MinHashSigs.compute($c, $k);
          |if ($res == null) { ${ev.isNull} = true; }
          |else { ${ev.value} = $res; }
          |""".stripMargin)
@@ -62,9 +63,9 @@ case class MinHashSigs(child: Expression, n: Int, k: Int)
 object MinHashSigs {
 
   /** shared by interpreted and codegen paths; null = no grams. */
-  def compute(text: String, n: Int, k: Int): GenericArrayData = {
-    val ghs = GramHashes.compute(text, n)
-    val m = ghs.numElements()
+  def compute(gramHashes: ArrayData, k: Int): GenericArrayData = {
+    val ghs = gramHashes.toLongArray()
+    val m = ghs.length
     if (m == 0) return null
     val out = new Array[Long](k)
     var i = 0
@@ -73,7 +74,7 @@ object MinHashSigs {
       var best = Long.MaxValue
       var g = 0
       while (g < m) {
-        val h = XXH64.hashLong(ghs.getLong(g), seed)
+        val h = XXH64.hashLong(ghs(g), seed)
         if (h < best) best = h
         g += 1
       }
@@ -83,9 +84,9 @@ object MinHashSigs {
     new GenericArrayData(out)
   }
 
-  /** Column-level API. */
-  def apply(text: Column, n: Int, k: Int): Column =
+  /** Column-level API over a [[GramHashes]] column. */
+  def apply(gramHashes: Column, k: Int): Column =
     org.apache.spark.sql.GraftBridge.column(
       MinHashSigs(
-        org.apache.spark.sql.GraftBridge.expression(text), n, k))
+        org.apache.spark.sql.GraftBridge.expression(gramHashes), k))
 }

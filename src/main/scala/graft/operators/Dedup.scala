@@ -208,6 +208,9 @@ object Dedup {
     * is unchanged for every surviving bucket, and 0 (the default) keeps
     * exact parity with the oracle. The count aggregation shuffles on
     * the same key as the self-join, so AQE plans both from one exchange.
+    * [[minhashLshPairs]] pairs inside a grouped bucket instead of
+    * self-joining, so it applies the same cap as a filter on that
+    * group's row count.
     */
   private[operators] def capBuckets(rows: DataFrame,
       keyCols: Seq[String], maxBucketSize: Int): DataFrame =
@@ -221,62 +224,87 @@ object Dedup {
     }
 
   /** MinHash signatures: k columns sig_0..sig_{k-1} per id, computed
-    * in ONE map-side pass by [[graft.functions.MinHashSigs]] —
-    * bit-identical to the former explode + groupBy(id) + k×min shape,
-    * which shuffled one row per gram. No shuffle at any corpus size;
-    * gram-less docs are dropped like the groupBy dropped them.
+    * in ONE map-side pass by [[graft.functions.MinHashSigs]] over
+    * [[graft.functions.GramHashes]] — bit-identical to the former
+    * explode + groupBy(id) + k×min shape, which shuffled one row per
+    * gram. No shuffle at any corpus size; gram-less docs are dropped
+    * like the groupBy dropped them, by a generator over
+    * `when(sigs IS NOT NULL, …)` rather than a Filter: Catalyst pushes a
+    * Filter on a computed column under the projection and evaluates
+    * the kernel twice.
     */
   def minhashSignatures(docs: DataFrame, idCol: String, textCol: String,
-      n: Int, k: Int): DataFrame =
-    docs.select(col(idCol).as("id"),
-      graft.functions.MinHashSigs(col(textCol), n, k).as("__sigs"))
-      .filter(col("__sigs").isNotNull)
-      .select(col("id") +: (0 until k).map(i =>
-        element_at(col("__sigs"), i + 1).as(s"sig_$i")): _*)
+      n: Int, k: Int): DataFrame = {
+    val sigs = col("__sigs")
+    docs.select(col(idCol).as("id"), graft.functions.MinHashSigs(
+        graft.functions.GramHashes(col(textCol), n), k).as("__sigs"))
+      .select(inline(when(sigs.isNotNull, array(struct(col("id") +:
+        (0 until k).map(i => element_at(sigs, i + 1).as(s"sig_$i")): _*)))))
+  }
 
-  /** MinHash+LSH near-dup candidate pairs verified by exact Jaccard.
-    * bands × rowsPerBand must equal k. Probability a pair with true
-    * Jaccard s becomes a candidate: 1-(1-s^rows)^bands.
+  /** MinHash+LSH near-dup candidate pairs verified by exact Jaccard:
+    * (doc_a, doc_b, common, na, nb) for every doc_a < doc_b that share
+    * a band bucket and satisfy common / (na + nb − common) ≥ num/den.
+    * bands × rowsPerBand is the signature length k; a pair with true
+    * Jaccard s becomes a candidate with probability
+    * 1-(1-s^rows)^bands. Ids are unique document keys; a NULL id never
+    * pairs.
+    *
+    * Each branch tokenizes and hashes a document once: one (id, gh)
+    * relation of [[graft.functions.GramHashes]] arrays feeds the band
+    * branch ([[graft.functions.MinHashSigs]] over gh) and the verify
+    * branch, and no Filter reads a kernel column (Catalyst would push it
+    * under the projection and run the kernel again). Candidates are
+    * paired INSIDE each (band_idx, band_key) bucket and then made
+    * distinct, so the band branch runs once, where a self-join of the
+    * band rows would run it per join side; `maxBucketSize > 0` first
+    * drops buckets of more rows (see [[capBuckets]]). Verify takes
+    * common = |gh_a ∩ gh_b| and na, nb = |gh| from the arrays (64-bit
+    * gram hashes, like [[exactJaccardPairs]]).
     */
   def minhashLshPairs(docs: DataFrame, idCol: String, textCol: String,
       n: Int = 3, bands: Int = 16, rowsPerBand: Int = 4,
       num: Int = 1, den: Int = 2, maxBucketSize: Int = 0): DataFrame = {
     val k = bands * rowsPerBand
-    val sigs = minhashSignatures(docs, idCol, textCol, n, k)
-    // band key = hash of the band's signature slice; explode to
-    // (band_idx, band_key, id) and self-join bucket-locally
-    val bandRows = capBuckets(sigs.select(col("id"),
-      posexplode(array((0 until bands).map { bnd =>
-        hash((bnd * rowsPerBand until (bnd + 1) * rowsPerBand)
-          .map(i => col(s"sig_$i")): _*)
-      }: _*)).as(Seq("band_idx", "band_key"))),
-      Seq("band_idx", "band_key"), maxBucketSize)
-    val l = bandRows.as("l")
-    val r = bandRows.as("r")
-    val candidates = l.join(r,
-        col("l.band_idx") === col("r.band_idx") &&
-        col("l.band_key") === col("r.band_key") &&
-        col("l.id") < col("r.id"))
-      .select(col("l.id").as("doc_a"), col("r.id").as("doc_b"))
-      .distinct()
-    // exact verify on candidates only (64-bit gram hashes, like
-    // exactJaccardPairs); set sizes map-side from the gram-array length
-    val grams = gramHashes(docs, idCol, textCol, n)
-    val sizes = gramSetSizes(docs, idCol, textCol, n)
-    val ga = grams.toDF("doc_a", "gram_a")
-    val gb = grams.toDF("doc_b2", "gram_b")
+    val grams = docs.select(col(idCol).as("id"),
+      graft.functions.GramHashes(col(textCol), n).as("gh"))
+    // band key = hash of the band's signature slice
+    val sigs = col("sigs")
+    val bandRows = grams
+      .select(col("id"), graft.functions.MinHashSigs(col("gh"), k).as("sigs"))
+      .select(col("id"), posexplode(when(sigs.isNotNull,
+        array((0 until bands).map { bnd =>
+          hash((bnd * rowsPerBand until (bnd + 1) * rowsPerBand)
+            .map(i => element_at(sigs, i + 1)): _*)
+        }: _*))).as(Seq("band_idx", "band_key")))
+    // `rows`, not size(ids): collect_list drops NULL ids, which the cap
+    // still counts
+    val buckets = bandRows.groupBy("band_idx", "band_key")
+      .agg(collect_list(col("id")).as("ids"), count(lit(1)).as("rows"))
+    val candidates =
+      (if (maxBucketSize > 0) buckets.filter(col("rows") <= maxBucketSize)
+       else buckets)
+        .select(explode(col("ids")).as("doc_a"), col("ids"))
+        .select(col("doc_a"),
+          explode(filter(col("ids"), _ > col("doc_a"))).as("doc_b"))
+        .distinct()
+    // shuffle joins on both sides, so the two exchanges of `grams` are
+    // one plan that runs once; a broadcast of either side would stream
+    // `grams` through one join and rebuild it for the other
+    val a = grams.hint("merge").as("a")
+    val b = grams.hint("merge").as("b")
     candidates
-      .join(ga, Seq("doc_a"))
-      .join(gb, col("doc_b") === col("doc_b2") &&
-        col("gram_a") === col("gram_b"))
-      .groupBy("doc_a", "doc_b").agg(count(lit(1)).as("common"))
-      .join(sizes.withColumnRenamed("id", "doc_a")
-        .withColumnRenamed("nset", "na"), "doc_a")
-      .join(sizes.withColumnRenamed("id", "doc_b")
-        .withColumnRenamed("nset", "nb"), "doc_b")
-      .filter(col("common") * den >= (col("na") + col("nb") -
-        col("common")) * num)
-      .select("doc_a", "doc_b", "common", "na", "nb")
+      .join(a, col("doc_a") === col("a.id"))
+      .join(b, col("doc_b") === col("b.id"))
+      .select(col("doc_a"), col("doc_b"),
+        size(array_intersect(col("a.gh"), col("b.gh"))).cast("long")
+          .as("common"),
+        size(col("a.gh")).cast("long").as("na"),
+        size(col("b.gh")).cast("long").as("nb"))
+      // a pair sharing no gram has no common-gram rows to count in the
+      // gram-join formulation, so it is never reported
+      .filter(col("common") > 0 && col("common") * den >=
+        (col("na") + col("nb") - col("common")) * num)
   }
 
   /** Cross-source duplicate-overlap matrix: which source pairs share

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** PII / secret scrubbing — the redaction stage every production
@@ -17,9 +17,11 @@ import org.apache.spark.sql.functions._
   * pass a false positive costs a token, a false negative leaks PII
   * into a model.
   *
-  * 100 TB shape: pure map-side column expressions — `regexp_count` +
-  * `regexp_replace` fused into the scan by whole-stage codegen, no
-  * shuffle, no UDF, no driver state. The per-source report aggregates
+  * 100 TB shape: one map-side expression per document —
+  * [[graft.functions.ScrubFold]] runs every rule's count and replace in
+  * a single matcher pass, skips a rule whose required literal the text
+  * lacks, and is evaluated once per consuming plan node; no shuffle, no
+  * UDF, no driver state. The per-source report aggregates
   * group-count-sized output through a map-side partial agg. Patterns
   * stay in the RE2-compatible subset (no backrefs, no lookaround), so
   * external oracles (DuckDB) reproduce the byte-identical fold.
@@ -48,18 +50,21 @@ object Scrub {
     Rule("ipv4", Ipv4Re, "<IP>"),
     Rule("hex_secret", HexSecretRe, "<SECRET>"))
 
-  /** Adds `scrubbed` (text after all rules, applied in order) and one
-    * `n_<rule>` count per rule. One projection, codegen'd, no shuffle.
+  /** Adds one `n_<rule>` count per rule (INT) and `scrubbed` (text
+    * after all rules, applied in order); both NULL on NULL text. The
+    * fold is one struct-valued projection that the field reads below
+    * share: Catalyst does not inline an expression read more than once,
+    * so the kernel runs once per row.
     */
   def scrub(docs: DataFrame, textCol: String,
       rules: Seq[Rule] = defaultRules): DataFrame = {
-    val (scrubbed, counts) =
-      rules.foldLeft((col(textCol), Seq.empty[Column])) {
-        case ((cur, cs), r) =>
-          (regexp_replace(cur, r.pattern, r.replacement),
-            cs :+ regexp_count(cur, lit(r.pattern)).as(s"n_${r.name}"))
-      }
-    docs.select(col("*") +: counts :+ scrubbed.as("scrubbed"): _*)
+    val fold = graft.functions.ScrubFold(col(textCol),
+      rules.map(r => (r.pattern, r.replacement)))
+    val counts = rules.zipWithIndex.map { case (r, i) =>
+      col(s"__scrub.n$i").as(s"n_${r.name}") }
+    docs.select(col("*"), fold.as("__scrub"))
+      .select(col("*") +: counts :+ col("__scrub.scrubbed").as("scrubbed"): _*)
+      .drop("__scrub")
   }
 
   /** Per-group redaction report: documents touched, matches per rule,

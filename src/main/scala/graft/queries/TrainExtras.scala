@@ -135,11 +135,11 @@ object TrainExtras {
           "doc_id", "text", 3, 1, 2))),
 
     // the same report over the BANDED pair leg — the 100 TB route:
-    // map-side minhash signatures, bucket-capped band self-join,
-    // exact verification on candidates only. Identical rollup; the
-    // oracle (same SQL as the exact twin) doubles as a recall check —
-    // a hash match means LSH surfaced every qualifying pair at this
-    // scale factor.
+    // map-side minhash signatures, candidate pairs built inside each
+    // band bucket, exact verification on candidates only. Identical
+    // rollup; the oracle (same SQL as the exact twin) doubles as a
+    // recall check — a hash match means LSH surfaced every qualifying
+    // pair at this scale factor.
     "dedup_source_overlap_banded" -> ((s, dir) =>
       Dedup.sourceOverlap(docs(s, dir), "doc_id", "source",
         Dedup.minhashLshPairs(Tables.spread(docs(s, dir)),

@@ -1,9 +1,15 @@
 package graft.operators
 
+import scala.reflect.{ClassTag, classTag}
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.FilterExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
+import graft.functions.{GramHashes, MinHashSigs, ScrubFold}
 
-class DedupSpec extends SparkSpec {
+class DedupSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   import spark.implicits._
 
   private val corpus = Seq(
@@ -472,5 +478,135 @@ class DedupSpec extends SparkSpec {
     // gram-hash shuffle key; no pairwise join anywhere
     assert(p.contains("hashpartitioning(gh"), p)
     assert(!p.contains("CartesianProduct"), p)
+  }
+
+  /** [[Dedup.minhashLshPairs]] as it was built before it shared one
+    * gram-hash array per document: signatures behind a Filter, the
+    * count-then-join bucket cap, a band self-join, and an exact verify
+    * by gram explode, two joins, a groupBy and two set-size joins.
+    */
+  private def refLshPairs(docs: DataFrame, idCol: String, textCol: String,
+      n: Int, bands: Int, rowsPerBand: Int, num: Int, den: Int,
+      maxBucketSize: Int): DataFrame = {
+    val k = bands * rowsPerBand
+    val gh = GramHashes(col(textCol), n)
+    val sigs = docs.select(col(idCol).as("id"),
+        MinHashSigs(gh, k).as("__sigs"))
+      .filter(col("__sigs").isNotNull)
+      .select(col("id") +: (0 until k).map(i =>
+        element_at(col("__sigs"), i + 1).as(s"sig_$i")): _*)
+    val bandRows = Dedup.capBuckets(sigs.select(col("id"),
+      posexplode(array((0 until bands).map { bnd =>
+        hash((bnd * rowsPerBand until (bnd + 1) * rowsPerBand)
+          .map(i => col(s"sig_$i")): _*)
+      }: _*)).as(Seq("band_idx", "band_key"))),
+      Seq("band_idx", "band_key"), maxBucketSize)
+    val l = bandRows.as("l")
+    val r = bandRows.as("r")
+    val candidates = l.join(r,
+        col("l.band_idx") === col("r.band_idx") &&
+        col("l.band_key") === col("r.band_key") &&
+        col("l.id") < col("r.id"))
+      .select(col("l.id").as("doc_a"), col("r.id").as("doc_b"))
+      .distinct()
+    val grams = docs.select(col(idCol).as("id"), explode(gh).as("gh"))
+    val sizes = docs.select(col(idCol).as("id"),
+        size(gh).cast("long").as("nset"))
+      .filter(col("nset") > 0)
+    val ga = grams.toDF("doc_a", "gram_a")
+    val gb = grams.toDF("doc_b2", "gram_b")
+    candidates
+      .join(ga, Seq("doc_a"))
+      .join(gb, col("doc_b") === col("doc_b2") &&
+        col("gram_a") === col("gram_b"))
+      .groupBy("doc_a", "doc_b").agg(count(lit(1)).as("common"))
+      .join(sizes.withColumnRenamed("id", "doc_a")
+        .withColumnRenamed("nset", "na"), "doc_a")
+      .join(sizes.withColumnRenamed("id", "doc_b")
+        .withColumnRenamed("nset", "nb"), "doc_b")
+      .filter(col("common") * den >= (col("na") + col("nb") -
+        col("common")) * num)
+      .select("doc_a", "doc_b", "common", "na", "nb")
+  }
+
+  /** seeded corpus with planted near-duplicate clusters and PII, plus
+    * the edge texts: NULL, empty, under-n, `$` and `\`, a chained
+    * email, and a five-copy cluster that a bucket cap of 3 drops
+    */
+  private def lshCorpus(seed: Int): Seq[(Long, String)] = {
+    val rnd = new scala.util.Random(seed)
+    val vocab = Array.fill(40)(rnd.alphanumeric.filter(_.isLower)
+      .take(3 + rnd.nextInt(4)).mkString)
+    val plants = Seq("u1@example.com", "10.1.2.3",
+      "0123456789abcdef0123456789abcdef", "a@b.cc1@x.yy", "$1", "\\")
+    val bases = (0 until 60).flatMap { _ =>
+      val words = Array.fill(8 + rnd.nextInt(18))(vocab(rnd.nextInt(40)))
+      if (rnd.nextInt(3) == 0)
+        words(rnd.nextInt(words.length)) = plants(rnd.nextInt(plants.length))
+      val copies = if (rnd.nextInt(4) == 0) 1 + rnd.nextInt(3) else 0
+      words.mkString(" ") +: (0 until copies).map { _ =>
+        val c = words.clone()
+        if (rnd.nextBoolean()) c(rnd.nextInt(c.length)) = vocab(rnd.nextInt(40))
+        c.mkString(" ")
+      }
+    }
+    val edges = Seq(null, "", "a b", "$ \\ $1 \\\\ x y z w",
+      "a@b.cc1@x.yy and then some more words here") ++
+      Seq.fill(5)("the same five copies of one short document")
+    rnd.shuffle(bases ++ edges).zipWithIndex.map { case (t, i) =>
+      (i.toLong * 7 + 3, t) }
+  }
+
+  private def jsonDocs(rows: Seq[(Long, String)]): DataFrame = {
+    val dir = java.nio.file.Files.createTempDirectory("lsh").toString
+    rows.toDF("id", "text").coalesce(1).write.mode("overwrite").json(dir)
+    spark.read.schema("id long, text string").json(dir)
+  }
+
+  test("minhashLshPairs equals the band self-join + gram-join " +
+      "formulation, default and small parameters") {
+    Seq(7, 11).foreach { seed =>
+      val docs = Scrub.scrub(jsonDocs(lshCorpus(seed)), "text")
+      val results = Seq((3, 16, 4, 1, 2, 0), (2, 8, 2, 1, 3, 0),
+          (2, 8, 2, 1, 3, 3)).map { case ps @ (n, bands, rows, num, den, cap) =>
+        val got = Dedup.minhashLshPairs(docs, "id", "scrubbed", n,
+          bands, rows, num, den, cap)
+        val want = refLshPairs(docs, "id", "scrubbed", n, bands, rows,
+          num, den, cap)
+        assert(got.schema.map(f => (f.name, f.dataType)) ==
+          want.schema.map(f => (f.name, f.dataType)))
+        val g = got.orderBy("doc_a", "doc_b").collect().toSeq
+        assert(g == want.orderBy("doc_a", "doc_b").collect().toSeq,
+          s"seed $seed $ps")
+        assert(g.nonEmpty, s"seed $seed $ps")
+        g
+      }
+      assert(results(2).length < results(1).length,
+        s"seed $seed: the bucket cap dropped nothing")
+    }
+  }
+
+  test("minhashLshPairs runs each text kernel once per branch and " +
+      "filters on no kernel column") {
+    // file-backed: an in-memory input folds into a LocalRelation and
+    // hides the kernels from the executed plan
+    val docs = jsonDocs(lshCorpus(7))
+    val pairs = Dedup.minhashLshPairs(Scrub.scrub(docs, "text"), "id",
+      "scrubbed")
+    pairs.collect()
+    val plan = pairs.queryExecution.executedPlan
+    def nodesWith[T: ClassTag]: Int = collect(plan) {
+      case p if p.expressions.exists(
+        _.find(classTag[T].runtimeClass.isInstance).isDefined) => p
+    }.length
+    // band branch + verify branch; the verify's two joins share one
+    // exchange
+    assert(nodesWith[ScrubFold] == 2, plan)
+    assert(nodesWith[GramHashes] == 2, plan)
+    assert(nodesWith[MinHashSigs] == 1, plan)
+    val kernelFilters = collect(plan) { case f: FilterExec => f.condition }
+      .filter(_.find(_.getClass.getPackageName == "graft.functions")
+        .isDefined)
+    assert(kernelFilters.isEmpty, plan)
   }
 }
