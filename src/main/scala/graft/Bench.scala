@@ -222,38 +222,8 @@ object Bench {
         try { java.nio.file.Files.createDirectories(
           java.nio.file.Paths.get(d)); true }
         catch { case _: Exception => false }))
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // pinned up front so concurrent queries never plan under a conf
-      // another query's LogLines.batch flipped mid-flight
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.constraintPropagation.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      // the default 100-entry generated-class cache cannot hold even
-      // ONE engine query's ~130 codegen units, so every pass re-ran
-      // janino (JFR: jar-classpath resource scans + UnitCompiler in
-      // the top frames; condgate steady-state taskTime halved,
-      // 3.5 → 1.6 s, once the cache fit). 5000 entries ≈ the whole
-      // battery's distinct units at ~200 MB worst case inside the
-      // pinned 8 GiB bench heap. Same win applies off-bench: any
-      // long-running daemon re-plans identical sources per microbatch.
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      // let AQE coalesce INSIDE cached-plan materialization: the
-      // engine's shared-extraction cache (PlanBuilder.persistNow) is
-      // otherwise pinned at the static shuffle-partition count —
-      // Spark's default false disables AQE under InMemoryRelation —
-      // so a keyed-window extraction cached at bench scale ran 32
-      // one-row partitions, each paying the ~100 ms fixed task cost
-      // (mtail_engine_sessions: 198 tasks / 9 cpu-s → 30 tasks /
-      // 1.4 cpu-s, OPTIMIZATION_r20.md). Scale-adaptive by construction:
-      // AQE targets its advisory partition size, so big state keeps
-      // full parallelism.
-      .config(
-        "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
+    val builder = SparkEntry.sessionBuilder(cpus)
+      .config(SparkEntry.replanConfs)
     // streaming checkpoint logs (offsets/commits/state deltas) default
     // to java.io.tmpdir — the SAME contended virtual disk the shuffle
     // scratch was moved off above, and the streaming stages pay it per

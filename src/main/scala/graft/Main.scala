@@ -518,49 +518,16 @@ object Main {
   }
 
   private def session(): SparkSession = {
-    val b = SparkSession.builder().appName("graft")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.constraintPropagation.enabled", "false")
-      // a tailing daemon re-plans the SAME program every microbatch;
-      // the default 100-entry generated-class cache cannot hold one
-      // non-trivial program's codegen units, so every batch re-ran
-      // janino (r19 optimization round, JFR-measured: recompilation
-      // was a top-frame cost). 5000 entries ≈ hundreds of MB worst
-      // case, bounded, and amortized forever in a daemon.
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      // AQE inside cached-plan materialization: the per-batch shared
-      // extraction cache is otherwise pinned at the static shuffle
-      // partition count — a keyed-window extraction caches one
-      // near-empty partition per shuffle partition, each paying the
-      // fixed per-task cost (r20: mtail_engine_sessions 198 → 30
-      // tasks). AQE's advisory size keeps real volume parallel.
-      .config(
-        "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
     // under spark-submit the master (and parallelism) come from the
     // submit command; standalone falls back to every local core
-    val withMaster =
-      if (sys.props.contains("spark.master")) b
-      else {
-        val cores = Runtime.getRuntime.availableProcessors()
-        b.master(s"local[$cores]")
-          .config("spark.sql.shuffle.partitions", cores)
-          .config("spark.ui.enabled", "false")
-      }
-    val spark = withMaster.getOrCreate()
-    // checkpoint-location hygiene for the tailing daemon (same rule as
-    // graft.streaming.Streaming.sessionDefaults): when the deployment
-    // provisioned a scratch disk (spark.local.dir) and no explicit
-    // streaming checkpoint location, put the per-microbatch offset/
-    // commit logs there instead of silently on java.io.tmpdir
-    if (spark.conf.getOption(
-        "spark.sql.streaming.checkpointLocation").forall(_.isEmpty))
-      spark.conf.getOption("spark.local.dir")
-        .map(_.split(",").head)
-        .foreach(d => spark.conf.set(
-          "spark.sql.streaming.checkpointLocation",
-          s"$d/graft-ckpt-${ProcessHandle.current().pid()}"))
+    val spark = SparkEntry.sessionBuilder(
+      Runtime.getRuntime.availableProcessors().toString)
+      .appName("graft")
+      .config(SparkEntry.replanConfs)
+      .getOrCreate()
+    // the tailing daemon's offset/commit logs go to the provisioned
+    // scratch disk, not silently to java.io.tmpdir
+    graft.streaming.Streaming.checkpointFallback(spark)
     spark.sparkContext.setLogLevel("WARN")
     spark
   }

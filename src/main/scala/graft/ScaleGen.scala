@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale-up generator: replicate the driver's sf0.1 tables ×N with
@@ -73,18 +73,16 @@ object ScaleGen {
     require(args.length >= 2, "usage: ScaleGen <inDir> <outDir> [factor]")
     val (inDir, outDir) = (args(0), args(1))
     val factor = if (args.length > 2) args(2).toInt else 10
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
+    val spark = SparkEntry.sessionBuilder(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
       .appName("graft-scalegen")
+      // 32 shuffle partitions whatever the core count: a global
+      // sort's range partitions become the output files (write below)
       .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.constraintPropagation.enabled", "false")
       // events.ts is TIMESTAMP(NANOS): read it as a raw long and write
       // it back as a long, so Tables' read path sees the same shape it
       // sees on the driver's parquet (TESTDATA.md / Tables.scala)
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 

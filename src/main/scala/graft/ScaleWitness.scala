@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.SparkSession
 
 /** ×100 recall witness for the banded-LSH near-dup path (r16 verdict
   * order #3): `ann_lsh_near_dup`'s DuckDB oracle twin is quadratic on
@@ -32,14 +31,8 @@ object ScaleWitness {
     val plantCos = 0.99
     val sf01 = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
       "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = SparkEntry.sessionBuilder(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 

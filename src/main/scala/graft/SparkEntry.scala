@@ -19,4 +19,44 @@ object SparkEntry {
   def oracleSql: Map[String, String] =
     MtailSurface.oracle ++ AnalyticsExtras.oracle ++
       LlmExtras.oracle ++ EngineQueries.oracle ++ TrainExtras.oracle
+
+  /** The session recipe every graft main starts from; each main adds
+    * only what differs. UTC session time. Non-ANSI cast/overflow
+    * semantics, which the mtail paths need, pinned up front so
+    * concurrent queries never plan under a conf another query's
+    * LogLines.batch flipped mid-flight. No constraint propagation.
+    * Unless a master was given (spark-submit passes it as the
+    * `spark.master` system property): `local[cores]` with one shuffle
+    * partition per core and no UI.
+    */
+  def sessionBuilder(cores: String): SparkSession.Builder = {
+    val b = SparkSession.builder()
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.ansi.enabled", "false")
+      .config("spark.sql.constraintPropagation.enabled", "false")
+    if (sys.props.contains("spark.master")) b
+    else b.master(s"local[$cores]")
+      .config("spark.sql.shuffle.partitions", cores)
+      .config("spark.ui.enabled", "false")
+  }
+
+  /** Added by the sessions that re-plan the same programs over and
+    * over (a tailing daemon, the bench):
+    *  - the default 100-entry generated-class cache cannot hold one
+    *    engine query's ~130 codegen units, so every pass or microbatch
+    *    re-ran janino (JFR: condgate steady-state task time 3.5 →
+    *    1.6 s once the cache fit). 5000 entries ≈ the whole battery's
+    *    distinct units at ~200 MB worst case, bounded;
+    *  - AQE inside cached-plan materialization: the shared extraction
+    *    cache (PlanBuilder.persistNow) is otherwise pinned at the
+    *    static shuffle-partition count — Spark's default disables AQE
+    *    under InMemoryRelation — so a keyed-window extraction cached
+    *    one near-empty partition per shuffle partition, each paying
+    *    the fixed per-task cost (mtail_engine_sessions: 198 tasks /
+    *    9 cpu-s → 30 tasks / 1.4 cpu-s, OPTIMIZATION_r20.md). AQE's
+    *    advisory partition size keeps real volume parallel.
+    */
+  val replanConfs: Map[String, String] = Map(
+    "spark.sql.codegen.cache.maxEntries" -> "5000",
+    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning" -> "true")
 }

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 import java.util.concurrent.Executors
 import scala.concurrent.{Await, ExecutionContext, Future}
@@ -37,20 +36,8 @@ object Verify {
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
 
     // ---- 2. Spark session ----
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // Queries run concurrently on this one session; the mtail paths
-      // need non-ANSI cast/overflow semantics and would otherwise flip
-      // the conf mid-flight (LogLines.batch) so which neighbours plan
-      // under which mode becomes timing-dependent. Pin it up front so
-      // every query plans under the same conf.
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.constraintPropagation.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = SparkEntry.sessionBuilder(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Spark 4.1 lazily builds ICU collation case tables on the first
     // lower()/upper() — a one-time ~10-70 s CPU hit on a loaded box

@@ -3,7 +3,7 @@ package graft.plan
 import scala.collection.mutable
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -296,7 +296,7 @@ final class PlanBuilder(program: Ir.Program, lines: DataFrame,
     * window expression would be rejected by the analyzer.
     */
   private def withCappedInc(df: DataFrame, raw: Column,
-      w: org.apache.spark.sql.expressions.WindowSpec): DataFrame = {
+      w: WindowSpec): DataFrame = {
     val cap = textConcatCap
     if (cap <= 0) df.withColumn("__iv", raw)
     else df
@@ -380,17 +380,21 @@ final class PlanBuilder(program: Ir.Program, lines: DataFrame,
     readMemo.getOrElseUpdate((metric, mode), {
       val ordT = curDf.schema("ord").dataType
       val name = stableName("__kpfx", metric + "|" + mode)
+      // the exclusive prefix of `value` over one window: the whole
+      // order (exact global) or one order bucket (two-phase scan)
+      def prefix(w: WindowSpec): Column = mode match {
+        case "sum" => coalesce(sum(value).over(w), zeroOf(vt))
+        case _ => last(value, ignoreNulls = true).over(w)
+      }
+      def priorRows(part: Column*): WindowSpec =
+        Window.partitionBy(part: _*).orderBy(col("ord"))
+          .rowsBetween(Window.unboundedPreceding, -1)
       if (resolvedSites.isEmpty) {
         // pass 1: the raw exact global window, INLINE, registering
         // nothing. This branch only runs inside a pass-1 read impl,
         // which the pass-2 reset discards (the __mrd wrapper defers
         // the read itself), so no machinery is built for it.
-        val wg = Window.partitionBy().orderBy(col("ord"))
-          .rowsBetween(Window.unboundedPreceding, -1)
-        mode match {
-          case "sum" => coalesce(sum(value).over(wg), zeroOf(vt))
-          case _ => last(value, ignoreNulls = true).over(wg)
-        }
+        prefix(priorRows())
       } else if (inputUnderSpreadFloor) {
         // Input below the spread floor (the SAME size gate that keeps
         // tiny inputs unspread): the two-phase bucket decomposition
@@ -401,39 +405,25 @@ final class PlanBuilder(program: Ir.Program, lines: DataFrame,
         // directly; big inputs keep the distributed two-phase scan.
         // Semantics identical (the decomposition exists to PARALLELIZE
         // this exact expression — see the scaladoc above).
-        pending(name) = mode match {
-          case "sum" => coalesce(sum(value).over(
-            Window.partitionBy().orderBy(col("ord"))
-              .rowsBetween(Window.unboundedPreceding, -1)), zeroOf(vt))
-          case _ => last(value, ignoreNulls = true).over(
-            Window.partitionBy().orderBy(col("ord"))
-              .rowsBetween(Window.unboundedPreceding, -1))
-        }
+        pending(name) = prefix(priorRows())
         col(name)
       } else {
-        val v = value
-        val wb = Window.partitionBy(bucketOf(ordT, col("ord")))
-          .orderBy(col("ord"))
-          .rowsBetween(Window.unboundedPreceding, -1)
-        val within = mode match {
-          case "sum" => coalesce(sum(v).over(wb), zeroOf(vt))
-          case _ => last(v, ignoreNulls = true).over(wb)
-        }
+        val within = prefix(priorRows(bucketOf(ordT, col("ord"))))
         val key = bucketKey(ordT, bucketOf(ordT, col("ord")))
-        val off = materializeLazyJoin(key, refsOf(v) + "ord",
+        val off = materializeLazyJoin(key, refsOf(value) + "ord",
           snap => {
             val b = bucketOf(ordT, col("ord"))
             val woff = Window.partitionBy(lit(0)).orderBy(col("__b"))
               .rowsBetween(Window.unboundedPreceding, -1)
             val agg = mode match {
               case "sum" =>
-                snap.select(b.as("__b"), v.as("__d"))
+                snap.select(b.as("__b"), value.as("__d"))
                   .groupBy(col("__b"))
                   .agg(sum(col("__d")).as("__p"))
                   .withColumn("v", sum(col("__p")).over(woff))
               case _ =>
                 snap.select(b.as("__b"), col("ord").as("__o"),
-                  v.as("__d"))
+                  value.as("__d"))
                   .groupBy(col("__b"))
                   .agg(max(when(col("__d").isNotNull,
                     struct(col("__o"), col("__d")))).as("__m"))
@@ -452,26 +442,31 @@ final class PlanBuilder(program: Ir.Program, lines: DataFrame,
       }
     })
 
-  /** A cross-line read whose key EXPRESSION differs from the write
-    * sites' key expressions (`m[$x/2]` read vs `m[$x]` write): the
-    * cheap same-window read would attribute each row's write to the
-    * READ key evaluated on that row — the wrong cell. Instead, write
-    * rows (true write key, ord, value) and probe rows (read key, ord)
-    * union into one relation, a window per KEY takes the
-    * last-value/running-sum strictly before each probe, and the probe
-    * results join back by the unique row ord. Deferred like the other
-    * materializations so the key/value columns' regex structs exist.
-    */
   /** one write site feeding an as-of read: true keys, site order,
     * firing cond, value, and whether it SETS (vs increments).
     */
   private case class AsofWrite(keys: Seq[Column], idx: Int,
       cond: Column, value: Column, isSet: Boolean)
 
-  /** mode: "last" = last-set value, "sum" = running increment total,
-    * "fold" = last set plus increments after it (mixed metrics) —
-    * fold probes come back as a struct<set, inc> so the caller can
-    * splice the carried cross-batch base in when no set preceded.
+  /** An as-of read: a cross-line read the cheap same-window read
+    * cannot answer — a read key EXPRESSION that differs from the write
+    * sites' (`m[$x/2]` read vs `m[$x]` write; the same-window read would
+    * attribute each row's write to the READ key evaluated on that
+    * row — the wrong cell), or a fold over mixed `=`/`++`/`+=`/del
+    * writes. Write rows (true write key, ord, value) and probe rows
+    * (read key, ord) explode into one relation; one fold
+    * ([[foldInWindow]]) takes the mode's value strictly before each
+    * probe — per cell key ([[keyedAsofProbes]]) or, for keyless state,
+    * per order bucket plus bucket offsets ([[keylessAsofProbes]]) —
+    * and the probe results join back by the unique row ord. Deferred
+    * like the other materializations so the key/value columns' regex
+    * structs exist.
+    *
+    * mode: "last" = last-set value, "sum" = running increment total,
+    * "fold" = last set plus increments after it (mixed metrics),
+    * "concat" = its text analogue (last set plus `+=` suffixes) —
+    * fold/concat probes come back as a struct<set, inc> so the caller
+    * can splice the carried cross-batch base in when no set preceded.
     */
   private case class AsofSpec(probeKeys: Seq[Column], probeIdx: Int,
       writes: Seq[AsofWrite], mode: String, vt: DataType)
@@ -619,14 +614,7 @@ final class PlanBuilder(program: Ir.Program, lines: DataFrame,
           pendingLazyJoins.remove(n)
           snapCur()
         }
-        // r17: same-key merged materialization — KEYED specs sharing
-        // one source snapshot, probe-key expression and value type
-        // fold through ONE exploded union, ONE exchange+sort and one
-        // (or two, for fold mode) Window operator instead of one
-        // exchange+sort per relation. Relations never interact: each
-        // window function masks to its own rows (`__r`).
-        val asofWithSrc = readyAsofs.toSeq.sortBy(_._1).map {
-          case (n, sp) =>
+        readyAsofs.toSeq.sortBy(_._1).foreach { case (n, sp) =>
           // the probe leg builds from the EARLIEST snapshot holding
           // every column it references (see `snaps`), not from the
           // up-to-date curDf
@@ -636,33 +624,6 @@ final class PlanBuilder(program: Ir.Program, lines: DataFrame,
           val src = snaps.find(s => need.subsetOf(s.columns.toSet))
             .getOrElse(curDf)
           noteConsumed(need)
-          (n, sp, src)
-        }
-        val mergedGroups: Seq[Seq[(String, AsofSpec, DataFrame)]] =
-          asofWithSrc
-            .filter { case (_, sp, _) =>
-              // keyed non-concat folds only: the keyless path is a
-              // different (bucketed) machine, and concat's capped-inc
-              // helper columns are single-relation by construction
-              sp.probeKeys.nonEmpty && sp.mode != "concat" &&
-                !sp.writes.forall(_.keys.isEmpty)
-            }
-            .groupBy { case (_, sp, src) =>
-              // stable base identity: the snapshot's position (−1 for
-              // curDf) — identityHashCode could collide across two
-              // distinct snapshots and merge legs onto the wrong base
-              (snaps.indexWhere(_ eq src),
-                PlanBuilder.joinKeys(sp.probeKeys).toString,
-                sp.vt.sql)
-            }
-            .values.filter(_.size >= 2)
-            .map(_.sortBy(_._1)).toSeq.sortBy(_.head._1)
-        val mergedNames = mergedGroups.flatten.map(_._1).toSet
-        mergedGroups.foreach { group =>
-          mergedKeyedAsofs(group.head._3, group.map(g => (g._1, g._2)))
-        }
-        asofWithSrc.filterNot(t => mergedNames(t._1)).foreach {
-          case (n, sp, src) =>
           // materialize each leg's key/value on the base FIRST, as a
           // plain projection: a leg's key or value can carry window
           // expressions, which the analyzer extracts from a
@@ -939,88 +900,58 @@ final class PlanBuilder(program: Ir.Program, lines: DataFrame,
     true
   }
 
-  /** the keyed as-of leg: window partitioned by the metric key. */
-  /** Merged materialization of ≥2 KEYED as-of relations sharing one
-    * source snapshot, probe-key expression and value type (r17, the
-    * r16 verdict's condgate audit): every relation's legs explode
-    * into ONE (k, __o, __i, __w, __r, __v, __s) union, so the
-    * per-key window pays one exchange+sort for the whole group
-    * instead of one per relation — at cluster scale, one shuffle
-    * stage instead of N over the same probe rows. Window functions
-    * mask to their own relation (`__r`), so folds never see another
-    * relation's rows; identical WindowSpecs collapse into one Window
-    * operator. Probe extraction and the ord-join back stay
-    * per-relation (each read observes the fold at ITS OWN site
-    * position — same-line visibility differs between reads, so probe
-    * rows cannot be shared). Reached, e.g., by a keyed value read
-    * plus the `del … after` existence companion of the same cell
-    * (pinned in DelAfterSpec).
+  /** The in-window fold of one as-of relation's exploded legs
+    * (k, __o, __i, __w, __v, __s), written once for both machines: `w`
+    * is the keyed machine's window per cell key `k`, or phase 2 of the
+    * keyless scan's window per order bucket `__pid`; either orders by
+    * (__o, __i, __w) and ends one row before the current one. Adds:
+    *  - sum, last: `__wn` = the running sum / the last non-null value;
+    *  - fold, concat: `__wset` = the last set value and `__winc` = the
+    *    increments after it (all of them when no set precedes). The
+    *    running increment total rides in `__incB` (fold: sum of the
+    *    null-as-zero increments `__iv`) or `__cb` (concat: the ordered
+    *    concatenation of the possibly capped suffixes `__iv`), and the
+    *    increments after the last set are that total minus its value
+    *    AT the set row (`__setCum` / `__pfx`) — a subtraction for
+    *    numbers, a substring for append-only text. Null-set rows (cond
+    *    false / aborted) are invisible to `last`.
     */
-  private def mergedKeyedAsofs(src: DataFrame,
-      group: Seq[(String, AsofSpec)]): Unit = {
-    val base = src.select(col("*") +:
-      group.flatMap { case (n, sp) =>
-        sp.writes.zipWithIndex.flatMap { case (wr, i) =>
-          Seq(PlanBuilder.joinKeys(wr.keys).as(s"${n}_wk$i"),
-            when(wr.cond, wr.value).cast(sp.vt).as(s"${n}_wv$i"))
-        } :+ PlanBuilder.joinKeys(sp.probeKeys).as(s"${n}_pk")
-      }: _*)
-    val legs = group.zipWithIndex.flatMap { case ((n, sp), r) =>
-      sp.writes.zipWithIndex.map { case (wr, i) =>
-        struct(col(s"${n}_wk$i").as("k"), lit(wr.idx).as("__i"),
-          lit(1).as("__w"), lit(r).as("__r"),
-          col(s"${n}_wv$i").as("__v"), lit(wr.isSet).as("__s"))
-      } :+ struct(col(s"${n}_pk").as("k"), lit(sp.probeIdx).as("__i"),
-        lit(0).as("__w"), lit(r).as("__r"),
-        lit(null).cast(sp.vt).as("__v"), lit(false).as("__s"))
-    }
-    val w = Window.partitionBy(col("k"))
-      .orderBy(col("__o"), col("__i"), col("__w"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    var u = base
-      .select(col("ord").as("__o"),
-        explode(array(legs: _*)).as("__leg"))
-      .select(col("__leg.k").as("k"), col("__o"),
-        col("__leg.__i").as("__i"), col("__leg.__w").as("__w"),
-        col("__leg.__r").as("__r"), col("__leg.__v").as("__v"),
-        col("__leg.__s").as("__s"))
-    group.zipWithIndex.foreach { case ((n, sp), r) =>
-      val mine = col("__r") === lit(r)
-      sp.mode match {
-        case "sum" =>
-          u = u.withColumn(n, sum(when(mine, col("__v"))).over(w))
-        case "last" =>
-          u = u.withColumn(n,
-            last(when(mine, col("__v")), ignoreNulls = true).over(w))
-        case _ => // fold: last set + increments after it (see
-          // keyedAsofProbes — identical computation, relation-masked)
-          val setV = when(mine && col("__s"), col("__v"))
-          val incV = when(mine && !col("__s"),
-            coalesce(col("__v"), lit(0L).cast(sp.vt)))
-          u = u.withColumn(s"__incB_$r",
-            coalesce(sum(incV).over(w), lit(0L).cast(sp.vt)))
-          u = u.withColumn(n, struct(
-            last(setV, ignoreNulls = true).over(w).as("set"),
-            (col(s"__incB_$r") -
-              when(last(setV, ignoreNulls = true).over(w).isNotNull,
-                coalesce(last(when(mine && col("__s")
-                  .and(col("__v").isNotNull), col(s"__incB_$r")),
-                  ignoreNulls = true).over(w),
-                  lit(0L).cast(sp.vt)))
-                .otherwise(lit(0L).cast(sp.vt))).as("inc")))
-      }
-    }
-    group.zipWithIndex.foreach { case ((n, sp), r) =>
-      val probes = u
-        .filter(col("__w") === 0 && col("__r") === lit(r))
-        .select(col("__o").as(s"${n}_o"), col(n))
-      curDf = curDf.join(probes, col("ord") === col(s"${n}_o"), "left")
-        .drop(s"${n}_o")
-      pendingAsofs.remove(n)
-      snapCur()
+  private def foldInWindow(u: DataFrame, sp: AsofSpec,
+      w: WindowSpec): DataFrame = {
+    val setV = when(col("__s"), col("__v"))
+    val atSet = col("__s").and(col("__v").isNotNull)
+    sp.mode match {
+      case "sum" => u.withColumn("__wn", sum(col("__v")).over(w))
+      case "last" =>
+        u.withColumn("__wn", last(col("__v"), ignoreNulls = true).over(w))
+      case "concat" =>
+        // one window over a window column is illegal in one
+        // projection: each running column gets its own withColumn
+        withCappedInc(u, when(!col("__s"), col("__v")), w)
+          .withColumn("__cb", coalesce(
+            array_join(collect_list(col("__iv")).over(w), ""), lit("")))
+          .withColumn("__wset", last(setV, ignoreNulls = true).over(w))
+          .withColumn("__pfx",
+            last(when(atSet, col("__cb")), ignoreNulls = true).over(w))
+          .withColumn("__winc", when(col("__pfx").isNotNull,
+            col("__cb").substr(length(col("__pfx")) + 1,
+              length(col("__cb")))).otherwise(col("__cb")))
+      case _ => // fold
+        val zero = zeroOf(sp.vt)
+        u.withColumn("__iv", when(!col("__s"), coalesce(col("__v"), zero)))
+          .withColumn("__incB", coalesce(sum(col("__iv")).over(w), zero))
+          .withColumn("__wset", last(setV, ignoreNulls = true).over(w))
+          .withColumn("__setCum",
+            last(when(atSet, col("__incB")), ignoreNulls = true).over(w))
+          .withColumn("__winc", col("__incB") -
+            when(col("__wset").isNotNull, coalesce(col("__setCum"), zero))
+              .otherwise(zero))
     }
   }
 
+  /** Keyed as-of probes: [[foldInWindow]] per cell key `k`. fold and
+    * concat probes come back as struct<set, inc>.
+    */
   private def keyedAsofProbes(base: DataFrame, n: String, sp: AsofSpec,
       legs: Seq[Column]): DataFrame = {
     val w = Window.partitionBy(col("k"))
@@ -1032,51 +963,12 @@ final class PlanBuilder(program: Ir.Program, lines: DataFrame,
       .select(col("__leg.k").as("k"), col("__o"),
         col("__leg.__i").as("__i"), col("__leg.__w").as("__w"),
         col("__leg.__v").as("__v"), col("__leg.__s").as("__s"))
-    val withVis = sp.mode match {
-            case "sum" => u.withColumn(n, sum(col("__v")).over(w))
-            case "last" =>
-              u.withColumn(n, last(col("__v"), ignoreNulls = true)
-                .over(w))
-            case "concat" =>
-              // text fold: last set + ordered concat of `+=` suffixes
-              // after it. Concatenation is append-only, so "suffixes
-              // after the last set" = the running concat-before MINUS
-              // the prefix it had AT that set row — a substring, the
-              // string analogue of the numeric fold's subtraction
-              val setV = when(col("__s"), col("__v"))
-              val u2 = withCappedInc(u, when(!col("__s"), col("__v")),
-                w).withColumn("__cb",
-                coalesce(array_join(collect_list(col("__iv")).over(w),
-                  ""), lit("")))
-              val lastSet = last(setV, ignoreNulls = true).over(w)
-              val pfx = last(when(col("__s").and(col("__v").isNotNull),
-                col("__cb")), ignoreNulls = true).over(w)
-              u2.withColumn(n, struct(
-                lastSet.as("set"),
-                when(pfx.isNotNull, col("__cb").substr(
-                  length(pfx) + 1, length(col("__cb"))))
-                  .otherwise(col("__cb")).as("inc")))
-            case _ => // fold: last set + increments after it; null-set
-              // rows (cond false / aborted) are invisible to `last`
-              val setV = when(col("__s"), col("__v"))
-              val incV = when(!col("__s"),
-                coalesce(col("__v"), lit(0L).cast(sp.vt)))
-              // two selects: a window over a window column is illegal
-              // in one projection
-              val u2 = u.withColumn("__incBefore",
-                coalesce(sum(incV).over(w), lit(0L).cast(sp.vt)))
-              u2.withColumn(n, struct(
-                last(setV, ignoreNulls = true).over(w).as("set"),
-                (col("__incBefore") -
-                  when(last(setV, ignoreNulls = true).over(w).isNotNull,
-                    coalesce(last(when(col("__s").and(col("__v")
-                      .isNotNull), col("__incBefore")),
-                      ignoreNulls = true).over(w),
-                      lit(0L).cast(sp.vt)))
-                    .otherwise(lit(0L).cast(sp.vt))).as("inc")))
-          }
-    withVis.filter(col("__w") === 0)
-      .select(col("__o").as(s"${n}_o"), col(n))
+    val read = sp.mode match {
+      case "sum" | "last" => col("__wn")
+      case _ => struct(col("__wset").as("set"), col("__winc").as("inc"))
+    }
+    foldInWindow(u, sp, w).filter(col("__w") === 0)
+      .select(col("__o").as(s"${n}_o"), read.as(n))
   }
 
   /** Keyless as-of probes via a two-phase parallel prefix scan.
@@ -1090,23 +982,16 @@ final class PlanBuilder(program: Ir.Program, lines: DataFrame,
     * text set+concat likewise with substring extents), so the global
     * exclusive prefix decomposes into the classic two-phase scan:
     *
-    *  1. bucket the exploded legs by an ORDER-CONTIGUOUS, purely
-    *     data-derived key: the high bits of the row ordinal. A long
-    *     ordinal buckets by >>18 (same granularity as [[bucketOf]]:
-    *     ≤256 Ki rows per bucket for dense ids, and under the
-    *     monotonically_increasing_id pid<<33|row layout partition
-    *     boundaries stay bucket boundaries); a (filename, byte-offset)
-    *     ordinal buckets by 128 MiB file block — matching the tail
-    *     source's split size, so bucket parallelism tracks scan
-    *     parallelism. No sampling pass, no checkpoint: unlike
-    *     repartitionByRange + spark_partition_id (whose bounds are
-    *     re-sampled per evaluation), both consumers of the bucket id
-    *     agree by construction, under any re-execution;
-    *  2. fold each bucket independently — the same window
-    *     expressions as the keyed path, partitioned by bucket:
+    *  1. bucket the exploded legs by [[bucketOf]] over the row
+    *     ordinal — order-contiguous and purely data-derived, so both
+    *     consumers of the bucket id agree by construction, under any
+    *     re-execution (unlike repartitionByRange + spark_partition_id,
+    *     whose bounds are re-sampled per evaluation);
+    *  2. fold each bucket independently — [[foldInWindow]], the same
+    *     in-window fold as the keyed machine, partitioned by bucket:
     *     parallel, with per-task size bounded by the block size;
     *  3. fold the per-bucket TOTALS in bucket order — one row per
-    *     128 MiB of input, a trivially small one-task window;
+    *     bucket, a trivially small one-task window;
     *  4. broadcast the per-bucket exclusive offsets back and
     *     combine with each row's within-bucket prefix.
     *
@@ -1117,33 +1002,19 @@ final class PlanBuilder(program: Ir.Program, lines: DataFrame,
   private def keylessAsofProbes(base: DataFrame, n: String,
       sp: AsofSpec, legs: Seq[Column]): DataFrame = {
     val zero = zeroOf(sp.vt)
-    // same >>18 granularity as bucketOf (both legs of a row share
-    // __o, so any monotone bucketing is safe): under the
-    // monotonically_increasing_id layout (pid<<33|row) this still
-    // respects partition boundaries, and for DENSE long ordinals
-    // (event ids) it keeps ≤256 Ki rows per bucket where a >>33 shift
-    // would put everything below 2^33 in ONE bucket — the
-    // single-task window this decomposition exists to eliminate
-    val bucket = base.schema("ord").dataType match {
-      case LongType => shiftright(col("__o"), 18)
-      case st: StructType
-          if st.fieldNames.sameElements(Array("f", "o")) =>
-        struct(col("__o").getField("f").as("f"),
-          shiftright(col("__o").getField("o"), 27).as("b"))
-      case _ => lit(0L) // unknown ordinal shape: one bucket (exact,
-      // sequential — the pre-optimization behavior)
-    }
     val parts = base
       .select(col("ord").as("__o"),
         explode(array(legs: _*)).as("__leg"))
       .select(col("__o"),
         col("__leg.__i").as("__i"), col("__leg.__w").as("__w"),
         col("__leg.__v").as("__v"), col("__leg.__s").as("__s"))
-      .withColumn("__pid", bucket)
+      .withColumn("__pid", bucketOf(base.schema("ord").dataType,
+        col("__o")))
     // phase 2: within-bucket exclusive prefix, parallel per bucket
     val wp = Window.partitionBy(col("__pid"))
       .orderBy(col("__o"), col("__i"), col("__w"))
       .rowsBetween(Window.unboundedPreceding, -1)
+    val within = foldInWindow(parts, sp, wp)
     // phase 3: exclusive fold of bucket totals in bucket order (tiny)
     val wo = Window.partitionBy(lit(0)).orderBy(col("__pid"))
       .rowsBetween(Window.unboundedPreceding, -1)
@@ -1151,50 +1022,38 @@ final class PlanBuilder(program: Ir.Program, lines: DataFrame,
     def lastBy(cond: Column, v: Column): Column =
       max(when(cond, struct(col("__o"), col("__i"), col("__w"),
         v.as("x")))).getField("x")
+    val atSet = col("__s").and(col("__v").isNotNull)
+    def withOffs(offs: DataFrame): DataFrame =
+      within.join(broadcast(offs), Seq("__pid"), "left")
     val withFold = sp.mode match {
       case "sum" =>
-        val within = parts.withColumn("__wn", sum(col("__v")).over(wp))
         val offs = parts.groupBy(col("__pid"))
           .agg(sum(col("__v")).as("__p"))
           .withColumn("__off", sum(col("__p")).over(wo))
           .select(col("__pid"), col("__off"))
-        within.join(broadcast(offs), Seq("__pid"), "left")
-          .withColumn(n,
-            when(col("__wn").isNull && col("__off").isNull,
-              lit(null).cast(sp.vt))
-              .otherwise(coalesce(col("__wn"), zero) +
-                coalesce(col("__off"), zero)))
+        withOffs(offs).withColumn(n,
+          when(col("__wn").isNull && col("__off").isNull,
+            lit(null).cast(sp.vt))
+            .otherwise(coalesce(col("__wn"), zero) +
+              coalesce(col("__off"), zero)))
       case "last" =>
-        val within = parts.withColumn("__wn",
-          last(col("__v"), ignoreNulls = true).over(wp))
         val offs = parts.groupBy(col("__pid"))
           .agg(lastBy(col("__v").isNotNull, col("__v")).as("__p"))
           .withColumn("__off",
             last(col("__p"), ignoreNulls = true).over(wo))
           .select(col("__pid"), col("__off"))
-        within.join(broadcast(offs), Seq("__pid"), "left")
-          .withColumn(n, coalesce(col("__wn"), col("__off")))
+        withOffs(offs).withColumn(n, coalesce(col("__wn"), col("__off")))
       case "concat" =>
-        val setV = when(col("__s"), col("__v"))
-        val w1 = withCappedInc(parts, when(!col("__s"), col("__v")),
-          wp).withColumn("__cb",
-          coalesce(array_join(collect_list(col("__iv")).over(wp), ""),
-            lit("")))
-        val w2 = w1
-          .withColumn("__wset", last(setV, ignoreNulls = true).over(wp))
-          .withColumn("__pfx",
-            last(when(col("__s").and(col("__v").isNotNull), col("__cb")),
-              ignoreNulls = true).over(wp))
         // partition total: last set + the full concat MINUS the
         // running prefix at that set (same substring algebra as the
         // per-row read)
-        val partials = w1.groupBy(col("__pid")).agg(
+        val partials = within.groupBy(col("__pid")).agg(
           max(struct(col("__o"), col("__i"), col("__w"),
             concat(col("__cb"), coalesce(col("__iv"), lit("")))
               .as("ci")))
             .getField("ci").as("__tcb"),
-          lastBy(col("__s").and(col("__v").isNotNull),
-            struct(col("__v").as("s"), col("__cb").as("p"))).as("__sc"))
+          lastBy(atSet, struct(col("__v").as("s"), col("__cb").as("p")))
+            .as("__sc"))
         val p2 = partials.select(col("__pid"),
           col("__sc").getField("s").as("__pset"),
           when(col("__sc").isNotNull,
@@ -1216,32 +1075,16 @@ final class PlanBuilder(program: Ir.Program, lines: DataFrame,
               col("__cumC").substr(length(col("__cAtSet")) + 1,
                 length(col("__cumC"))))
               .otherwise(col("__cumC")).as("__offInc"))
-        val joined = w2.join(broadcast(offs), Seq("__pid"), "left")
-        val winc = when(col("__pfx").isNotNull,
-          col("__cb").substr(length(col("__pfx")) + 1,
-            length(col("__cb"))))
-          .otherwise(col("__cb"))
-        joined.withColumn(n, struct(
+        withOffs(offs).withColumn(n, struct(
           coalesce(col("__wset"), col("__offSet")).as("set"),
-          when(col("__pfx").isNotNull, winc)
+          when(col("__wset").isNotNull, col("__winc"))
             .otherwise(concat(coalesce(col("__offInc"), lit("")),
-              winc)).as("inc")))
+              col("__winc"))).as("inc")))
       case _ => // fold
-        val setV = when(col("__s"), col("__v"))
-        val incV = when(!col("__s"), coalesce(col("__v"), zero))
-        val w1 = parts.withColumn("__iv", incV)
-          .withColumn("__incB", coalesce(sum(col("__iv")).over(wp),
-            zero))
-        val w2 = w1
-          .withColumn("__wset", last(setV, ignoreNulls = true).over(wp))
-          .withColumn("__setCum",
-            last(when(col("__s").and(col("__v").isNotNull),
-              col("__incB")), ignoreNulls = true).over(wp))
         // partition total: last set + (total incs − incs before it)
-        val partials = w1.groupBy(col("__pid")).agg(
+        val partials = within.groupBy(col("__pid")).agg(
           sum(col("__iv")).as("__tinc"),
-          lastBy(col("__s").and(col("__v").isNotNull),
-            struct(col("__v").as("s"), col("__incB").as("c")))
+          lastBy(atSet, struct(col("__v").as("s"), col("__incB").as("c")))
             .as("__sc"))
         val p2 = partials.select(col("__pid"),
           col("__sc").getField("s").as("__pset"),
@@ -1260,14 +1103,10 @@ final class PlanBuilder(program: Ir.Program, lines: DataFrame,
               when(col("__offSet").isNotNull,
                 coalesce(col("__setCumP"), zero)).otherwise(zero))
               .as("__offInc"))
-        val joined = w2.join(broadcast(offs), Seq("__pid"), "left")
-        val winc = col("__incB") -
-          when(col("__wset").isNotNull,
-            coalesce(col("__setCum"), zero)).otherwise(zero)
-        joined.withColumn(n, struct(
+        withOffs(offs).withColumn(n, struct(
           coalesce(col("__wset"), col("__offSet")).as("set"),
-          when(col("__wset").isNotNull, winc)
-            .otherwise(coalesce(col("__offInc"), zero) + winc)
+          when(col("__wset").isNotNull, col("__winc"))
+            .otherwise(coalesce(col("__offInc"), zero) + col("__winc"))
             .as("inc")))
     }
     withFold.filter(col("__w") === 0)

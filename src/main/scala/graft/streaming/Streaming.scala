@@ -57,15 +57,22 @@ object Streaming {
       checkpointDir: Option[String] = None): SparkSession = {
     spark.conf.set("spark.sql.shuffle.partitions",
       statePartitionsFor(spark, expectedBatchRows).toString)
-    val key = "spark.sql.streaming.checkpointLocation"
     checkpointDir match {
-      case Some(d) => spark.conf.set(key, d)
-      case None if spark.conf.getOption(key).forall(_.isEmpty) =>
-        spark.conf.getOption("spark.local.dir")
-          .map(_.split(",").head).foreach(d => spark.conf.set(key,
-            s"$d/graft-ckpt-${ProcessHandle.current().pid()}"))
-      case None => // caller already provisioned one — keep it
+      case Some(d) => spark.conf.set(CheckpointKey, d)
+      case None => checkpointFallback(spark)
     }
     spark
   }
+
+  private val CheckpointKey = "spark.sql.streaming.checkpointLocation"
+
+  /** When no streaming checkpoint location is set, put one under the
+    * first `spark.local.dir` (a per-process directory); an existing
+    * one is kept. Without `spark.local.dir` nothing is set.
+    */
+  def checkpointFallback(spark: SparkSession): Unit =
+    if (spark.conf.getOption(CheckpointKey).forall(_.isEmpty))
+      spark.conf.getOption("spark.local.dir")
+        .map(_.split(",").head).foreach(d => spark.conf.set(
+          CheckpointKey, s"$d/graft-ckpt-${ProcessHandle.current().pid()}"))
 }

@@ -202,15 +202,18 @@ class DelAfterSpec extends SparkSpec {
   }
 
   test("a conditional value read and the Expire existence check of " +
-      "the same cell fold through ONE merged keyed as-of window") {
+      "the same cell plan at most two hash exchanges on the as-of key") {
     // the cond read of seen[$s] and the `$ex$seen` existence companion
     // probe the same key with the same value type from the same
-    // source, so the planner folds both relations through one
-    // relation-tagged (`__r`) union and one keyed window
-    // (PlanBuilder.mergedKeyedAsofs) instead of one window each.
+    // source: two keyed as-of relations, each folded by its own keyed
+    // window, so one shuffle on the as-of key `k` per relation and no
+    // more.
     // The read only runs when $x > 5 and creates the cell, so the
     // Expire aborts exactly on lines whose key was neither written
     // nor read before.
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.exchange.{EnsureRequirements,
+      ShuffleExchangeExec}
     val src =
       """counter zero
         |counter ok
@@ -231,15 +234,18 @@ class DelAfterSpec extends SparkSpec {
     val pb = new PlanBuilder(prog,
       LogLines.fromLines(lines.toDF("line"), "line"), 2020)
     val snap = pb.snapshot()
-    val plan = snap.queryExecution.optimizedPlan
-    val keyed = plan.collect {
-      case w: org.apache.spark.sql.catalyst.plans.logical.Window
-          if w.partitionSpec.exists(_.references.exists(_.name == "k")) =>
-        w
+    // sparkPlan is the planner's output before exchanges are placed;
+    // EnsureRequirements adds the shuffles the plan's operators need
+    val physical = EnsureRequirements()(snap.queryExecution.sparkPlan)
+    val onKey = physical.collect {
+      case e: ShuffleExchangeExec => e.outputPartitioning
+    }.count {
+      case h: HashPartitioning =>
+        h.expressions.exists(_.references.exists(_.name == "k"))
+      case _ => false
     }
-    assert(keyed.nonEmpty && keyed.forall(
-      _.child.exists(_.output.exists(_.name == "__r"))),
-      s"every keyed window must fold the merged group:\n$plan")
+    assert(onKey > 0 && onKey <= 2,
+      s"$onKey hash exchanges on the as-of key:\n$physical")
     val eng = Snapshot.collect(snap).map(c => (c.name, c.labels) -> c.value)
       .toMap
     val vm = MiniVm.run(prog, lines).map(c => (c.name, c.labels) -> c.value)

@@ -824,6 +824,37 @@ class VmSemanticsSpec extends SparkSpec {
     assert(cells(("t", Map("k" -> "a"))) == VStr("bye"))
   }
 
+  test("keyed text reads through another key fold set, del and += " +
+      "suffixes like the VM (keyed concat as-of)") {
+    // t is written by `=`, `+=` and del on $k and read on $j: every
+    // read of a `+=`-built text metric goes through the keyed concat
+    // as-of fold, here with a read key that differs from the writes'
+    val src =
+      """text t by k
+        |text o by k
+        |/^add (?P<k>\w+) (?P<s>\w+)$/ { t[$k] += $s }
+        |/^set (?P<k>\w+) (?P<s>\w+)$/ { t[$k] = $s }
+        |/^del (?P<k>\w+)$/ { del t[$k] }
+        |/^r (?P<k>\w+) (?P<j>\w+)$/ { o[$k] = t[$j] }
+        |/^ar (?P<k>\w+) (?P<s>\w+)$/ {
+        |  t[$k] += $s
+        |  o[$k] = t[$k]
+        |}
+        |""".stripMargin
+    val lines = Seq("add a x", "add b y", "r p a", "set a Q", "add a z",
+      "r q a", "add b w", "del a", "add a m", "r s a", "r u b",
+      "ar b v", "r v c")
+    val cells = run(src, lines)
+    val vm = graft.mtail.MiniVm.run(Frontend.parse(src, "vmsem"), lines)
+      .map(c => (c.name, c.labels) -> c.value).toMap
+    assert(cells == vm, s"engine $cells vs vm $vm")
+    assert(cells(("o", Map("k" -> "p"))) == VStr("x"))
+    assert(cells(("o", Map("k" -> "q"))) == VStr("Qz"))
+    assert(cells(("o", Map("k" -> "s"))) == VStr("m"))
+    assert(cells(("o", Map("k" -> "u"))) == VStr("yw"))
+    assert(cells(("o", Map("k" -> "b"))) == VStr("ywv"))
+  }
+
   test("joinKeys is injective even for values containing the " +
       "separator/escape bytes") {
     import org.apache.spark.sql.functions.col

@@ -209,6 +209,16 @@ class PlanCheckSpec extends SparkSpec {
     assert(occurrences <= 6,
       s"line source appears $occurrences times — as-of legs are " +
         "scanning per-site again")
+    // the running sum through the transformed read key equals the
+    // sequential VM: line "4" reads m[2], incremented by "1" and "2"
+    import graft.mtail.{MiniVm, Snapshot}
+    val lines = Seq("1", "2", "4")
+    val eng = Snapshot.collect(pb.snapshot())
+      .map(c => (c.name, c.labels) -> c.value).toMap
+    val vm = MiniVm.run(prog, lines)
+      .map(c => (c.name, c.labels) -> c.value).toMap
+    assert(eng == vm, s"engine $eng vs vm $vm")
+    assert(eng(("out", Map("k" -> "4"))) == Snapshot.VInt(2))
   }
 
   test("limit-N eviction compiles to a parallel TakeOrderedAndProject, " +
