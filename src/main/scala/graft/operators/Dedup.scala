@@ -338,21 +338,34 @@ object Dedup {
     * in its component (`canonical`); keeping rows where
     * `doc_id = canonical` yields the deduplicated corpus.
     *
-    * Alternating large-star / small-star contraction (the two-phase
-    * MapReduce connected-components algorithm of Kiveris et al., SoCC
-    * 2014 — the same shape GraphFrames ships): each round rewrites the
-    * edge set so every node hooks onto the minimum of its closed
-    * neighbourhood, halving star depth per round. Converges in
-    * O(log n) rounds even on a pure chain — min-label propagation
-    * (the previous implementation) needed diameter rounds there.
+    * Two stages. First a union-find runs inside each partition of the
+    * oriented, self-loop-free edges (one `mapPartitions`, no shuffle)
+    * and emits every local component as a star: one `(node, local
+    * min)` edge per non-root node. A partition's union-find holds
+    * O(nodes in that partition). When those star edges all lie in one
+    * partition (or there are none) they already are the exact fixed
+    * point, and no contraction round runs.
     *
-    * ONE Spark action per round: the round's edge set is
+    * Otherwise alternating large-star / small-star contraction (the
+    * two-phase MapReduce connected-components algorithm of Kiveris et
+    * al., SoCC 2014 — the same shape GraphFrames ships) merges the
+    * stars across partitions: each round rewrites the edge set so
+    * every node hooks onto the minimum of its closed neighbourhood,
+    * halving star depth per round. Converges in O(log n) rounds even
+    * on a pure chain — min-label propagation needed diameter rounds
+    * there.
+    *
+    * Each stage is one Spark action: its edge set is
     * `localCheckpoint(eager)`-materialized (cutting plan lineage so
-    * round N never re-derives rounds 0..N−1), and convergence is read
-    * from an [[org.apache.spark.sql.Observation]] riding the SAME
-    * action — (edge count, edge-hash sum) stable across a round means
-    * the edge set reached its star-graph fixed point. No separate
-    * driver `count()` job per round.
+    * round N never re-derives rounds 0..N−1), and convergence — plus,
+    * for the star edges, the partitions they lie in — is read from an
+    * [[org.apache.spark.sql.Observation]] riding the SAME action.
+    * (edge count, edge-hash sum) stable across a round means the edge
+    * set reached its star-graph fixed point.
+    *
+    * The union-find runs over `long`, so it applies to integral id
+    * types (the labels are cast back to the id type); any other id
+    * type enters the contraction with its distinct oriented edges.
     *
     * `maxRounds` still fails LOUDLY as a runaway guard, but at
     * O(log n) convergence 50 rounds covers any component a physical
@@ -368,7 +381,8 @@ object Dedup {
   private[graft] def canonicalIdsWithRounds(docs: DataFrame,
       idCol: String, pairs: DataFrame, maxRounds: Int = 50)
       : (DataFrame, Int) = {
-    import org.apache.spark.sql.Observation
+    import org.apache.spark.sql.{Encoders, Observation}
+    import org.apache.spark.sql.types._
     val w = org.apache.spark.sql.expressions.Window
     def sigN = count(lit(1)).as("n")
     def sigH = sum(hash(col("a"), col("b")).cast("long")).as("h")
@@ -377,19 +391,36 @@ object Dedup {
       (m("n").asInstanceOf[Long],
         Option(m("h")).fold(0L)(_.asInstanceOf[Long]))
     }
-    // oriented big→small, self-loop-free, distinct; observed so a
-    // pair graph that is ALREADY a star converges after one round
-    val obs0 = Observation()
-    var edges = pairs
+    // oriented big→small and self-loop-free (a NULL endpoint makes a
+    // self-loop under greatest/least, so it never pairs)
+    val oriented = pairs
       .select(greatest(col("doc_a"), col("doc_b")).as("a"),
         least(col("doc_a"), col("doc_b")).as("b"))
       .filter(col("a") =!= col("b"))
-      .distinct()
-      .observe(obs0, sigN, sigH)
+    val idType = oriented.schema("a").dataType
+    val integral = idType match {
+      case ByteType | ShortType | IntegerType | LongType => true
+      case _ => false
+    }
+    val seed =
+      if (integral) {
+        val ll = Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong)
+        oriented.select(col("a").cast("long"), col("b").cast("long"))
+          .as(ll).mapPartitions(localStars)(ll).toDF("a", "b")
+          .select(col("a").cast(idType).as("a"),
+            col("b").cast(idType).as("b"))
+      } else oriented.distinct()
+    val obs0 = Observation()
+    var edges = seed
+      .observe(obs0, sigN, sigH, min(spark_partition_id()).as("p0"),
+        max(spark_partition_id()).as("p1"))
       .localCheckpoint(true)
     var prevSig: Option[(Long, Long)] = Some(readSig(obs0))
     var rounds = 0
-    var converged = false
+    // stars from a single partition's union-find (or none at all) are
+    // the exact fixed point: both bounds are NULL when there are none.
+    // Other id types seed with their distinct edges, which are not stars.
+    var converged = integral && obs0.get("p0") == obs0.get("p1")
     while (!converged) {
       if (rounds >= maxRounds)
         throw new IllegalStateException(
@@ -459,6 +490,30 @@ object Dedup {
       .select(col("doc_id"),
         coalesce(col("lbl"), col("doc_id")).as("canonical"))
     (out, rounds)
+  }
+
+  /** union-find over one partition's `(a, b)` edges, roots kept at the
+    * component minimum: one `(node, component min)` edge per non-root
+    * node, i.e. every local component as a star on its minimum.
+    */
+  private def localStars(edges: Iterator[(Long, Long)])
+      : Iterator[(Long, Long)] = {
+    val parent = scala.collection.mutable.LongMap.empty[Long]
+    def find(x: Long): Long = {
+      var r = x
+      while (parent(r) != r) r = parent(r)
+      var y = x
+      while (y != r) { val up = parent(y); parent(y) = r; y = up }
+      r
+    }
+    edges.foreach { case (a, b) =>
+      parent.getOrElseUpdate(a, a)
+      parent.getOrElseUpdate(b, b)
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(ra max rb) = ra min rb
+    }
+    parent.keys.toArray.iterator.map(v => (v, find(v)))
+      .filter { case (v, r) => v != r }
   }
 
   /** SimHash fingerprint as 4 × 16-bit band columns band_0..band_3:

@@ -194,13 +194,14 @@ class DedupSpec extends SparkSpec with AdaptiveSparkPlanHelper {
         "rounds — superseded rounds are not being freed eagerly")
   }
 
-  test("canonicalIds matches union-find on random graphs") {
-    // star contraction vs a trusted O(α) union-find, 30 random graphs
-    // (fixed seed): same component minimum for every node. Shapes the
-    // chain/star specs don't cover — multi-component, cycles, dense
-    // cores, self-loops, duplicate and reversed edges.
+  /** 30 random graphs (fixed seed) with the component minimum of every
+    * node from a trusted O(α) union-find: (n, edges, expected labels).
+    * Shapes the chain/star specs don't cover — multi-component, cycles,
+    * dense cores, self-loops, duplicate and reversed edges.
+    */
+  private def randomGraphs: Seq[(Int, Seq[(Long, Long)], Map[Long, Long])] = {
     val rnd = new scala.util.Random(42)
-    (1 to 30).foreach { trial =>
+    (1 to 30).map { _ =>
       val n = 2 + rnd.nextInt(60)
       val m = rnd.nextInt(3 * n)
       val edges = Seq.fill(m)(
@@ -220,15 +221,110 @@ class DedupSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       val members = (1 to n).groupBy(find)
       val expect = members.flatMap { case (_, ms) =>
         val mn = ms.min.toLong; ms.map(_.toLong -> mn) }
+      (n, edges, expect)
+    }
+  }
+
+  private def pairsOf(edges: Seq[(Long, Long)]): DataFrame =
+    if (edges.isEmpty) Seq.empty[(Long, Long)].toDF("doc_a", "doc_b")
+    else edges.toDF("doc_a", "doc_b")
+
+  test("canonicalIds matches union-find on random graphs") {
+    // star contraction vs a trusted O(α) union-find, same component
+    // minimum for every node
+    randomGraphs.zipWithIndex.foreach { case ((n, edges, expect), i) =>
       val docs = (1L to n.toLong).map(i => (i, "x"))
         .toDF("doc_id", "text")
-      val pairs =
-        if (edges.isEmpty) Seq.empty[(Long, Long)].toDF("doc_a", "doc_b")
-        else edges.toDF("doc_a", "doc_b")
-      val got = Dedup.canonicalIds(docs, "doc_id", pairs)
+      val got = Dedup.canonicalIds(docs, "doc_id", pairsOf(edges))
         .as[(Long, Long)].collect().toMap
-      assert(got == expect, s"trial $trial: n=$n edges=$edges")
+      assert(got == expect, s"trial ${i + 1}: n=$n edges=$edges")
     }
+  }
+
+  test("canonicalIds matches union-find with pairs in one partition " +
+      "and spread over eight") {
+    // one partition: the per-partition union-find already labels every
+    // component, so no contraction round may run; eight partitions:
+    // components straddle partitions and the rounds must merge stars
+    randomGraphs.zipWithIndex.foreach { case ((n, edges, expect), i) =>
+      val docs = (1L to n.toLong).map(i => (i, "x"))
+        .toDF("doc_id", "text")
+      val (one, oneRounds) = Dedup.canonicalIdsWithRounds(docs,
+        "doc_id", pairsOf(edges).coalesce(1))
+      assert(one.as[(Long, Long)].collect().toMap == expect,
+        s"trial ${i + 1}, one partition: n=$n edges=$edges")
+      assert(oneRounds == 0,
+        s"trial ${i + 1}: one-partition stars took $oneRounds rounds")
+      val spread = Dedup.canonicalIds(docs, "doc_id",
+        pairsOf(edges).repartition(8))
+      assert(spread.as[(Long, Long)].collect().toMap == expect,
+        s"trial ${i + 1}, eight partitions: n=$n edges=$edges")
+    }
+  }
+
+  test("canonicalIds contracts a 1000-link chain spread over eight " +
+      "partitions in O(log n) rounds") {
+    // round-robin spreads neighbouring links over different partitions,
+    // so the local stars are short and the rounds must merge them
+    val n = 1000L
+    val chain = (1L to n).map(i => (i, "x")).toDF("doc_id", "text")
+    val pairs = (1L until n).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
+      .repartition(8)
+    val idsBefore = spark.sparkContext.getPersistentRDDs.keySet
+    val (canon, rounds) =
+      Dedup.canonicalIdsWithRounds(chain, "doc_id", pairs)
+    assert(rounds >= 1 && rounds <= 20,
+      s"chain of $n over 8 partitions took $rounds rounds")
+    val labels = canon.as[(Long, Long)].collect()
+    assert(labels.length == n && labels.forall(_._2 == 1L),
+      "every chain node must label to the component min")
+    val live =
+      (spark.sparkContext.getPersistentRDDs.keySet -- idsBefore).size
+    assert(live <= 1,
+      s"$live new persisted RDDs alive after $rounds checkpointed " +
+        "rounds — superseded rounds are not being freed eagerly")
+  }
+
+  test("canonicalIds never pairs a NULL endpoint or a self-loop") {
+    val docs = (1L to 6L).map(i => (i, "x")).toDF("doc_id", "text")
+    val pairs = Seq[(Option[Long], Option[Long])](
+      (Some(1L), None), (None, Some(2L)), (None, None),
+      (Some(3L), Some(3L)), (Some(5L), Some(4L)), (Some(6L), Some(6L)))
+      .toDF("doc_a", "doc_b")
+    Seq(pairs.coalesce(1), pairs.repartition(8)).foreach { p =>
+      val got = Dedup.canonicalIds(docs, "doc_id", p)
+        .as[(Long, Long)].collect().toMap
+      assert(got == Map(1L -> 1L, 2L -> 2L, 3L -> 3L, 4L -> 4L,
+        5L -> 4L, 6L -> 6L))
+    }
+  }
+
+  test("canonicalIds keeps INT and STRING ids: values and schema") {
+    // components {3,7,12}, {9,10,100}, {1} isolated. As strings the
+    // minimum is lexicographic: "100" < "9", "12" < "3".
+    val ids = Seq(1, 3, 7, 9, 10, 12, 100)
+    val links = Seq((7, 3), (12, 7), (9, 100), (10, 9))
+    def check(docs: DataFrame, pairs: DataFrame,
+        ref: DataFrame): Unit = {
+      def rows(df: DataFrame) = df.collect().map(_.toSeq).toSet
+      def fields(df: DataFrame) =
+        df.schema.fields.map(f => (f.name, f.dataType)).toSeq
+      Seq(pairs.coalesce(1), pairs.repartition(8)).foreach { p =>
+        val got = Dedup.canonicalIds(docs, "doc_id", p)
+        assert(fields(got) == fields(ref))
+        assert(rows(got) == rows(ref))
+      }
+    }
+    check(ids.map(i => (i, "x")).toDF("doc_id", "text"),
+      links.toDF("doc_a", "doc_b"),
+      Seq(1 -> 1, 3 -> 3, 7 -> 3, 12 -> 3, 9 -> 9, 10 -> 9, 100 -> 9)
+        .toDF("doc_id", "canonical"))
+    check(ids.map(i => (i.toString, "x")).toDF("doc_id", "text"),
+      links.map { case (a, b) => (a.toString, b.toString) }
+        .toDF("doc_a", "doc_b"),
+      Seq("1" -> "1", "3" -> "12", "7" -> "12", "12" -> "12",
+        "9" -> "10", "10" -> "10", "100" -> "10")
+        .toDF("doc_id", "canonical"))
   }
 
   test("contaminatedDocs counts distinct shared n-grams per train doc") {
