@@ -277,42 +277,6 @@ final class PlanBuilder(program: Ir.Program, lines: DataFrame,
       case _ => lit(0L)
     }
 
-  /** `spark.graft.text.maxConcatChars` (0 = unlimited, the default):
-    * bounds the running `+=`-suffix stream a cross-line text read
-    * accumulates per cell per batch. The running-concat window is
-    * O(rows × accumulated length) per cell — a hot cell appended to on
-    * every line of a 100 TB batch is a memory/CPU hazard. With the cap
-    * set, the accumulated suffix stream is exactly the first N
-    * characters of the raw stream (appends past the cap drop), so the
-    * worst case becomes O(rows × N). On the keyless parallel path the
-    * cap applies per order bucket (each bucket keeps at most N chars).
-    */
-  private def textConcatCap: Long =
-    lines.sparkSession.conf
-      .get("spark.graft.text.maxConcatChars", "0").toLong
-
-  /** append `__iv` = the (possibly capped) `+=`-suffix column. The
-    * cap's running raw length rides its own window column — a nested
-    * window expression would be rejected by the analyzer.
-    */
-  private def withCappedInc(df: DataFrame, raw: Column,
-      w: WindowSpec): DataFrame = {
-    val cap = textConcatCap
-    if (cap <= 0) df.withColumn("__iv", raw)
-    else df
-      .withColumn("__ivlb",
-        coalesce(sum(length(raw)).over(w), lit(0L)))
-      .withColumn("__iv",
-        when(col("__ivlb") >= cap, lit(null).cast(StringType))
-          .otherwise(raw.substr(lit(1),
-            // clamp into Int BEFORE the cast: a cap above
-            // Int.MaxValue would wrap negative under the pinned
-            // non-ANSI session and silently DROP text instead of
-            // capping it (substr lengths are Int-bounded anyway)
-            least(greatest(lit(cap) - col("__ivlb"), lit(0L)),
-              lit(Int.MaxValue.toLong)).cast("int"))))
-  }
-
   /** injective string form of a bucket, for the offsets join key. */
   private def bucketKey(ordType: DataType, b: Column): Column =
     ordType match {
@@ -834,8 +798,7 @@ final class PlanBuilder(program: Ir.Program, lines: DataFrame,
       SeqCycleEval.ReadSpec(n, seqReadInfo(n).metric,
         seqReadInfo(n).siteIdx, readKeyEncs(n)))
     val out =
-      try SeqCycleEval.resolve(curDf, specs, reads, mspecs,
-        textConcatCap)
+      try SeqCycleEval.resolve(curDf, specs, reads, mspecs)
       catch { case scala.util.control.NonFatal(_) => return false }
     // the automaton's input rows (slot columns, seed keys) consume
     // whatever materialized columns they referenced — except the
@@ -910,7 +873,7 @@ final class PlanBuilder(program: Ir.Program, lines: DataFrame,
     *    increments after it (all of them when no set precedes). The
     *    running increment total rides in `__incB` (fold: sum of the
     *    null-as-zero increments `__iv`) or `__cb` (concat: the ordered
-    *    concatenation of the possibly capped suffixes `__iv`), and the
+    *    concatenation of the suffixes `__iv`), and the
     *    increments after the last set are that total minus its value
     *    AT the set row (`__setCum` / `__pfx`) — a subtraction for
     *    numbers, a substring for append-only text. Null-set rows (cond
@@ -927,7 +890,7 @@ final class PlanBuilder(program: Ir.Program, lines: DataFrame,
       case "concat" =>
         // one window over a window column is illegal in one
         // projection: each running column gets its own withColumn
-        withCappedInc(u, when(!col("__s"), col("__v")), w)
+        u.withColumn("__iv", when(!col("__s"), col("__v")))
           .withColumn("__cb", coalesce(
             array_join(collect_list(col("__iv")).over(w), ""), lit("")))
           .withColumn("__wset", last(setV, ignoreNulls = true).over(w))
@@ -2570,9 +2533,11 @@ final class PlanBuilder(program: Ir.Program, lines: DataFrame,
         concatWrites.map(s =>
           AsofWrite(writeKeyColsOf(s), s.idx,
             coalesce(s.cond, lit(false)),
-            strCast(s.valueIr.get,
+            // Cat pops the suffix through PopString: floats 'G'
+            // UPPERCASE (vm.go:171-186), as in siteFrame
+            valCast(s.valueIr.get,
               exprColumn(s.valueIr.get, s.frames, s.timeReg, s.idx,
-                reading + metric), s.frames), isSet = false))
+                reading + metric), s.frames, StringType), isSet = false))
           ++ writes.map(s =>
             AsofWrite(writeKeyColsOf(s), s.idx,
               coalesce(s.cond, lit(false)),
@@ -2839,23 +2804,20 @@ final class PlanBuilder(program: Ir.Program, lines: DataFrame,
     // ADDS — regardless of the declared kind (`counter c; c = 5` is
     // legal and last-write; `gauge g; g++` is legal and accumulates).
     // Pure-op metrics use the cheap single-agg paths; a metric mixing
-    // `=` and `++`/`+=` needs base-plus-post-set-increments (below).
-    val mixed = numeric && setSites.nonEmpty && incSites.nonEmpty
+    // `=` with `++` or text `+=` folds per cell (mixedFrame)
+    val concatSites = updates.filter(_.op == OpConcat)
+    if (setSites.nonEmpty &&
+        (concatSites.nonEmpty || numeric && incSites.nonEmpty))
+      return mixedFrame(decl, vt, setSites ++ incSites ++ concatSites ++
+        dels)
     // whether a batch value REPLACES the store cell on merge (the
     // batch contained a set-write) or ADDS to it (pure increments);
-    // the mixed path computes this per cell instead
+    // mixedFrame computes this per cell instead
     val wasSetStatic: Boolean = decl.kind match {
       case Ir.Histogram => false
       case Ir.Text => !updates.exists(_.op == OpConcat)
       case _ => setSites.nonEmpty
     }
-
-    if (mixed) return mixedNumericFrame(decl, vt, keyNames,
-      setSites, incSites, delFilter)
-    val concatSites = updates.filter(_.op == OpConcat)
-    if (setSites.nonEmpty && concatSites.nonEmpty)
-      return mixedTextFrame(decl, keyNames, setSites, concatSites,
-        delFilter)
 
     val unioned = updates.map(siteFrame(_, vt)).reduceOption(_ unionAll _)
     val afterDel: Option[DataFrame] = unioned.map(delFilter)
@@ -2864,7 +2826,7 @@ final class PlanBuilder(program: Ir.Program, lines: DataFrame,
       val aggs = decl.kind match {
         case _ if updates.exists(_.op == OpConcat) =>
           // pure `+=` at String type (set-mixing dispatched to
-          // mixedTextFrame above) — Text kind or a String-PINNED
+          // mixedFrame above) — Text kind or a String-PINNED
           // counter/gauge (TypeInfer; ADD_ASSIGN@String is Cat
           // regardless of kind, codegen.go:523-540):
           // ordered running concatenation: every delta in arrival
@@ -2946,59 +2908,106 @@ final class PlanBuilder(program: Ir.Program, lines: DataFrame,
     }
   }
 
-  /** Per-cell fold for a numeric metric written by BOTH `=` and
-    * `++`/`+=`: the VM applies them in order per datum, so the final
-    * value is the LAST set's value plus every increment AFTER it
-    * (increments before the last set are overwritten). Two cheap
-    * cell-cardinality aggregations and a broadcast gate join — only
-    * programs that actually mix pay this path.
+  /** Export frame of a metric written by BOTH `=` and `++`/`+=`
+    * (numeric or text): [[cellFold]] over its sets, immediate dels and
+    * increments. `__was_set` tells the store merge to REPLACE (the
+    * cell's last barrier is a set) or ADD/APPEND (only increments since
+    * the batch start or a del, whose store cell [[batchDeleteDfs]]
+    * already removed). Declared scalar counters zero-init at 0 @
+    * epoch-0 when no write survives.
     */
-  private def mixedNumericFrame(decl: Ir.MetricDecl, vt: DataType,
-      keyNames: Seq[String], setSites: Seq[Site], incSites: Seq[Site],
-      delFilter: DataFrame => DataFrame): DataFrame = {
-    val setsU = delFilter(setSites.map(siteFrame(_, vt))
-      .reduce(_ unionAll _))
-    val incsU = delFilter(incSites.map(siteFrame(_, vt))
-      .reduce(_ unionAll _))
-    val setAggs = Seq(max_by(col("v"), col("ordk")).as("__base"),
-      max(col("ordk")).as("__setOrd"),
-      max_by(col("ts"), col("ordk")).as("__setTs"))
-    val sets =
-      if (keyNames.isEmpty) setsU.agg(setAggs.head, setAggs.tail: _*)
-      else setsU.groupBy(keyNames.map(col): _*)
-        .agg(setAggs.head, setAggs.tail: _*)
-    val gated =
-      (if (keyNames.isEmpty) incsU.crossJoin(broadcast(sets))
-       else incsU.join(broadcast(sets), keyNames, "left"))
-        .filter(col("__setOrd").isNull || col("ordk") > col("__setOrd"))
-    val incAggs = Seq(sum("v").as("__incSum"),
-      max_by(col("ts"), col("ordk")).as("__incTs"))
-    val incs =
-      if (keyNames.isEmpty) gated.agg(incAggs.head, incAggs.tail: _*)
-      else gated.groupBy(keyNames.map(col): _*)
-        .agg(incAggs.head, incAggs.tail: _*)
-    val combined =
-      if (keyNames.isEmpty) sets.crossJoin(incs)
-      else sets.join(incs, keyNames, "full_outer")
-    val value = (coalesce(col("__base"), lit(0L).cast(vt)) +
-      coalesce(col("__incSum"), lit(0L).cast(vt))).cast(vt)
-    // gated increments all come AFTER the last set, so if any exist
-    // the newest of them owns the datum stamp; otherwise the set does
-    val ts = coalesce(col("__incTs"), col("__setTs"))
-    val touched = col("__base").isNotNull || col("__incSum").isNotNull
+  private def mixedFrame(decl: Ir.MetricDecl, vt: DataType,
+      ws: Seq[Site]): DataFrame = {
+    val keyNames = decl.keys.indices.map(i => s"k$i")
+    val f = cellFold(ws, vt, keyNames, identity)
+    val value = cellValue(zeroOf(vt), vt)
+    val ts = coalesce(col("__incTs"), col("__bTs"))
+    val wasSet = coalesce(!col("__bDel"), lit(false))
     val out =
-      if (keyNames.isEmpty && decl.kind == Ir.Counter)
-        // declared scalar counters zero-init at 0 @ epoch-0
-        combined.select(
-          coalesce(when(touched, value), lit(0L).cast(vt)).as("value"),
-          when(!touched, timestamp_seconds(lit(0))).otherwise(ts)
+      if (zeroInitScalar(decl.name))
+        f.select(when(cellLive, value).otherwise(zeroOf(vt)).as("value"),
+          when(cellLive, ts).otherwise(timestamp_seconds(lit(0)))
             .as("ts"),
-          col("__setOrd").isNotNull.as("__was_set"))
-      else
-        combined.filter(touched).select(
-          (keyNames.map(col) ++ Seq(value.as("value"), ts.as("ts"),
-            col("__setOrd").isNotNull.as("__was_set"))): _*)
+          wasSet.as("__was_set"))
+      else f.filter(cellLive).select((keyNames.map(col) ++
+        Seq(value.as("value"), ts.as("ts"), wasSet.as("__was_set"))): _*)
     limitNewest(out, decl)
+  }
+
+  /** The VM's per-datum rule folded over one batch: Iset replaces the
+    * datum, an immediate `del` removes it (the next access recreates it
+    * at zero, store.go GetDatum/RemoveDatum), `++` adds and text `+=`
+    * appends. Over the event rows of `ws` (siteFrame's, re-keyed to
+    * `keys` by `rekey`) it yields one row per touched cell: the LAST
+    * barrier — set or del — as `__bDel`, `__bVal`, `__bTs` (null when
+    * the cell saw none), and the increments after its ordinal as
+    * `__inc` (their sum, or their concatenation in arrival order for a
+    * String metric) and `__incTs` (null when none). A set whose value
+    * is null never wrote — the line aborted on a failed conversion
+    * before Sset (vm.go:97-129) — so siteFrame drops it and it is no
+    * barrier, like the in-batch reads' as-of folds. No keys is the one
+    * global cell: `groupBy()` yields its row even when nothing fired.
+    * Without increment sites this is one aggregation; with them the
+    * increments gate on a broadcast of the barriers' `__bOrd`.
+    */
+  private def cellFold(ws: Seq[Site], vt: DataType, keys: Seq[String],
+      rekey: DataFrame => DataFrame): DataFrame = {
+    val ks = keys.map(col)
+    def events(ss: Seq[Site]): Option[DataFrame] = ss.map(s =>
+      rekey(siteFrame(s, vt).withColumn("__d", lit(s.op == OpDel))))
+      .reduceOption(_ unionAll _)
+    val (incWs, barrierWs) = ws.partition(increments)
+    val barriers = events(barrierWs).map(_.groupBy(ks: _*)
+      .agg(max_by(struct(col("__d"), col("v"), col("ts"), col("ordk")),
+        col("ordk")).as("__b"))
+      .select(ks ++ Seq(col("__b.__d").as("__bDel"),
+        col("__b.v").as("__bVal"), col("__b.ts").as("__bTs"),
+        col("__b.ordk").as("__bOrd")): _*))
+    val incs = events(incWs).map { u =>
+      val gated = barriers.fold(u)(b =>
+        u.join(broadcast(b.select(ks :+ col("__bOrd"): _*)), keys, "left")
+          .filter(col("__bOrd").isNull || col("ordk") > col("__bOrd")))
+      // the guard keeps the global cell's empty concat null, not ""
+      val total =
+        if (vt == StringType) when(count(lit(1)) > 0, concat_ws("",
+          transform(array_sort(collect_list(struct(col("ordk"),
+            col("v")))), x => x.getField("v"))))
+        else sum(col("v"))
+      gated.groupBy(ks: _*).agg(total.as("__inc"),
+        max_by(col("ts"), col("ordk")).as("__incTs"))
+    }
+    def nullCols(cs: Seq[(String, DataType)]): Seq[Column] =
+      cs.map { case (n, t) => lit(null).cast(t).as(n) }
+    (barriers.map(_.drop("__bOrd")), incs) match {
+      case (Some(b), Some(i)) => b.join(i, keys, "full_outer")
+      case (Some(b), None) => b.select(col("*") +: nullCols(Seq(
+        "__inc" -> vt, "__incTs" -> b.schema("__bTs").dataType)): _*)
+      case (None, Some(i)) => i.select(col("*") +: nullCols(Seq(
+        "__bDel" -> BooleanType, "__bVal" -> vt,
+        "__bTs" -> i.schema("__incTs").dataType)): _*)
+      case _ => throw new IllegalArgumentException("cellFold: no writes")
+    }
+  }
+
+  private def increments(s: Site): Boolean =
+    s.op == OpInc || s.op == OpConcat
+
+  /** a [[cellFold]] cell still holds a datum: its last barrier is a
+    * set, or increments followed it (or it had none).
+    */
+  private def cellLive: Column =
+    coalesce(!col("__bDel"), lit(false)) || col("__inc").isNotNull
+
+  /** a live [[cellFold]] cell's value: the set value, zero after a del,
+    * or `prev` (the carried datum; zero for a per-batch export) with no
+    * barrier — plus or followed by the increments after it.
+    */
+  private def cellValue(prev: Column, vt: DataType): Column = {
+    val start = when(col("__bDel").isNull, prev)
+      .when(col("__bDel"), zeroOf(vt)).otherwise(col("__bVal"))
+    when(col("__inc").isNull, start).otherwise(
+      if (vt == StringType) concat(start, col("__inc"))
+      else (start + col("__inc")).cast(vt))
   }
 
   /** `limit N`: keep the N newest cells by datum timestamp
@@ -3015,58 +3024,6 @@ final class PlanBuilder(program: Ir.Program, lines: DataFrame,
   private def limitNewest(df: DataFrame, decl: MetricDecl): DataFrame =
     if (decl.limit > 0) df.orderBy(col("ts").desc).limit(decl.limit)
     else df
-
-  /** Per-cell fold for a TEXT metric written by BOTH `=` and `+=`:
-    * Iset replaces the string datum, ADD_ASSIGN appends
-    * (codegen.go:359-363), so the batch value is the LAST set
-    * concatenated with every `+=` suffix AFTER it in arrival order.
-    * `__was_set` per cell tells the store merge to REPLACE (the batch
-    * saw a set) or APPEND (pure suffixes) — mirrors
-    * [[mixedNumericFrame]] with concat for sum.
-    */
-  private def mixedTextFrame(decl: Ir.MetricDecl,
-      keyNames: Seq[String], setSites: Seq[Site],
-      concatSites: Seq[Site],
-      delFilter: DataFrame => DataFrame): DataFrame = {
-    val setsU = delFilter(setSites.map(siteFrame(_, StringType))
-      .reduce(_ unionAll _)).filter(col("v").isNotNull)
-    val catsU = delFilter(concatSites.map(siteFrame(_, StringType))
-      .reduce(_ unionAll _)).filter(col("v").isNotNull)
-    val setAggs = Seq(max_by(col("v"), col("ordk")).as("__base"),
-      max(col("ordk")).as("__setOrd"),
-      max_by(col("ts"), col("ordk")).as("__setTs"))
-    val sets =
-      if (keyNames.isEmpty) setsU.agg(setAggs.head, setAggs.tail: _*)
-      else setsU.groupBy(keyNames.map(col): _*)
-        .agg(setAggs.head, setAggs.tail: _*)
-    val gated =
-      (if (keyNames.isEmpty) catsU.crossJoin(broadcast(sets))
-       else catsU.join(broadcast(sets), keyNames, "left"))
-        .filter(col("__setOrd").isNull || col("ordk") > col("__setOrd"))
-    val catAggs = Seq(
-      when(count(lit(1)) > 0, concat_ws("", transform(
-        array_sort(collect_list(struct(col("ordk"), col("v")))),
-        x => x.getField("v")))).as("__cat"),
-      max_by(col("ts"), col("ordk")).as("__catTs"))
-    val cats =
-      if (keyNames.isEmpty) gated.agg(catAggs.head, catAggs.tail: _*)
-      else gated.groupBy(keyNames.map(col): _*)
-        .agg(catAggs.head, catAggs.tail: _*)
-    val combined =
-      if (keyNames.isEmpty) sets.crossJoin(cats)
-      else sets.join(cats, keyNames, "full_outer")
-    // untouched cells emit NO row: the keyless crossJoin otherwise
-    // yields ("", no-stamp) for an empty batch, whose merge would
-    // wipe a live cell (same guard as the pure-concat agg)
-    val touched = col("__base").isNotNull || col("__cat").isNotNull
-    val value = concat(coalesce(col("__base"), lit("")),
-      coalesce(col("__cat"), lit("")))
-    val ts = coalesce(col("__catTs"), col("__setTs"))
-    val out = combined.filter(touched).select(
-      (keyNames.map(col) ++ Seq(value.as("value"), ts.as("ts"),
-        col("__setOrd").isNotNull.as("__was_set"))): _*)
-    limitNewest(out, decl)
-  }
 
   /** Full exported snapshot: one row per metric cell. */
   def snapshot(): DataFrame = {
@@ -3182,8 +3139,7 @@ final class PlanBuilder(program: Ir.Program, lines: DataFrame,
     // no longer matches it — unpersist the tracked handles
     persistedDf.foreach(_.unpersist())
     persistedDf = None
-    checkpointed.foreach(
-      org.apache.spark.sql.GraftBridge.unpersistCheckpoint)
+    checkpointed.foreach(CheckpointUtil.freeCheckpoint)
     checkpointed = None
     val _ = curDf.unpersist()
   }
@@ -3205,239 +3161,45 @@ final class PlanBuilder(program: Ir.Program, lines: DataFrame,
 
   /** End-of-batch state of every cross-line-read metric, for the
     * streaming runner to carry into the next batch: metric → relation
-    * (k, v) of last written values, with delete-last keys dropped and
-    * the carried-in state anti-joined underneath. Fully distributed —
-    * no collect; the runner localCheckpoints each relation so the next
-    * batch's plan starts from materialized partitions, not the whole
-    * lineage of every previous batch.
+    * (k, v, ts) of each cell's datum after this batch — [[cellFold]]
+    * over its sets, immediate dels and increments, a cell with no
+    * barrier continuing from its carried value, a cell whose last
+    * barrier is a del with no increment after it dropped — and the
+    * carried cells this batch never touched underneath. Fully
+    * distributed — no collect; the runner localCheckpoints each
+    * relation so the next batch's plan starts from materialized
+    * partitions, not the whole lineage of every previous batch.
     */
-  def finalReadStateDfs(): Map[String, DataFrame] = {
+  def finalReadStateDfs(): Map[String, DataFrame] =
     readMetrics.toSeq.sorted.flatMap { m =>
       val vt = metricType(m)
-      val writes = sites.filter(s => s.metric.name == m)
-        .filter(s => s.op == OpSet ||
-          (s.op == OpDel && s.afterSeconds.isEmpty)).toSeq
-      val incWrites = sites.filter(s => s.metric.name == m &&
-        s.op == OpInc).toSeq
-      def stateRows(s: Site, value: Column): DataFrame =
-        df.select(PlanBuilder.joinKeys(s.keys.map(k =>
-          strCast(k, exprColumn(k, s.frames, s.timeReg, s.idx),
-            s.frames))).as("k"),
-          value.as("v"),
-          unix_timestamp(s.timeReg).as("ts"),
-          ordKey(s.idx).as("ordk"),
-          coalesce(s.cond, lit(false)).as("__c"))
-          .filter(col("__c")).drop("__c")
-      // last set-or-del per key — the fold barrier. __bVal = set
-      // value (null for del), __bDel marks a delete, __bOrd gates
-      // later deltas. A set whose value expr nulled out (aborted
-      // line) never wrote, so it is no barrier; a del always is.
-      def barrierOf(ws: Seq[Site], bvt: DataType): Option[DataFrame] =
-        ws.map { s =>
-          val value = s.op match {
-            case OpDel => lit(null).cast(bvt)
-            case _ => valCast(s.valueIr.get,
-              exprColumn(s.valueIr.get, s.frames, s.timeReg, s.idx),
-              s.frames, bvt)
-          }
-          stateRows(s, value).withColumn("__d", lit(s.op == OpDel))
-        }.reduceOption(_ unionAll _)
-          .map(_.filter(col("v").isNotNull || col("__d"))
-            .groupBy("k")
-            .agg(max_by(struct(col("__d"), col("v"), col("ts")),
-              col("ordk")).as("__b"),
-              max(col("ordk")).as("__bOrd"))
-            .select(col("k"), col("__b.__d").as("__bDel"),
-              col("__b.v").as("__bVal"), col("__b.ts").as("__bTs"),
-              col("__bOrd")))
-      val concatWs = sites.filter(s => s.metric.name == m &&
-        s.op == OpConcat).toSeq
-      if (concatWs.nonEmpty) {
-        // `+=`-built text end state: last set (del → fresh datum)
-        // concatenated with every later `+=` suffix in order; keys
-        // never barriered prepend the carried string; a del with no
-        // later `+=` deletes the carried cell
-        val concU = concatWs.map(s =>
-          stateRows(s, strCast(s.valueIr.get,
-            exprColumn(s.valueIr.get, s.frames, s.timeReg, s.idx),
-            s.frames))).reduce(_ unionAll _)
-          .filter(col("v").isNotNull)
-        val barr = barrierOf(writes, StringType)
-        val gated = barr match {
-          case Some(b) =>
-            concU.join(b.select(col("k"), col("__bOrd")), Seq("k"),
-              "left")
-              .filter(col("__bOrd").isNull ||
-                col("ordk") > col("__bOrd"))
-              .drop("__bOrd")
-          case None => concU
-        }
-        val concs = gated.groupBy("k").agg(
-          concat_ws("", transform(
-            array_sort(collect_list(struct(col("ordk"), col("v")))),
-            x => x.getField("v"))).as("__cat"),
-          max_by(col("ts"), col("ordk")).as("__cTs"))
-        val batch = barr match {
-          case Some(b) =>
-            b.drop("__bOrd").join(concs, Seq("k"), "full_outer")
-          case None => concs
-            .withColumn("__bDel", lit(null).cast("boolean"))
-            .withColumn("__bVal", lit(null).cast("string"))
-            .withColumn("__bTs", lit(null).cast("bigint"))
-        }
-        def dead = coalesce(col("__bDel"), lit(false)) &&
-          col("__cat").isNull
-        val merged = carriedState(m) match {
-          case Some(prev) =>
-            val pr = prev.withColumnRenamed("v", "__pv")
-              .withColumnRenamed("ts", "__pts")
-            val updated = batch.join(pr, Seq("k"), "left")
-              .filter(!dead)
-              .select(col("k"),
-                when(col("__bDel").isNull,
-                  concat(coalesce(col("__pv"), lit("")),
-                    coalesce(col("__cat"), lit(""))))
-                  .when(col("__bDel"), coalesce(col("__cat"), lit("")))
-                  .otherwise(concat(coalesce(col("__bVal"), lit("")),
-                    coalesce(col("__cat"), lit("")))).as("v"),
-                coalesce(col("__cTs"), col("__bTs"), col("__pts"))
-                  .as("ts"))
-            pr.join(batch.select("k"), Seq("k"), "left_anti")
-              .select(col("k"), col("__pv").as("v"),
-                col("__pts").as("ts"))
-              .unionAll(updated)
-          case None =>
-            batch.filter(!dead)
-              .select(col("k"),
-                when(coalesce(col("__bDel"), lit(false)),
-                  coalesce(col("__cat"), lit("")))
-                  .otherwise(concat(coalesce(col("__bVal"), lit("")),
-                    coalesce(col("__cat"), lit("")))).as("v"),
-                coalesce(col("__cTs"), col("__bTs")).as("ts"))
-        }
-        Some(m -> merged)
-      } else if (incWrites.nonEmpty && writes.nonEmpty) {
-        // mixed end state: the last set-or-del per key plus increments
-        // after it; keys this batch never barriered continue from the
-        // carried base; a del with no later increment DELETES the cell
-        // (the VM removes the datum; the next access recreates at 0)
-        val barr = barrierOf(writes, vt).get
-        val incsU = incWrites.map(s =>
-          stateRows(s, exprColumn(s.valueIr.get, s.frames, s.timeReg,
-            s.idx).cast(vt))).reduce(_ unionAll _)
-          .filter(col("v").isNotNull)
-        val gated = incsU
-          .join(barr.select(col("k"), col("__bOrd")), Seq("k"),
-            "left")
-          .filter(col("__bOrd").isNull ||
-            col("ordk") > col("__bOrd"))
-        val incs = gated.groupBy("k").agg(sum("v").as("__incSum"),
-          max_by(col("ts"), col("ordk")).as("__incTs"))
-        val batch = barr.drop("__bOrd")
-          .join(incs, Seq("k"), "full_outer")
-        def dead = coalesce(col("__bDel"), lit(false)) &&
-          col("__incSum").isNull
-        val combined = carriedState(m) match {
-          case Some(prev) =>
-            val pr = prev.withColumnRenamed("v", "__pv")
-              .withColumnRenamed("ts", "__pts")
-            val updated = batch.join(pr, Seq("k"), "left")
-              .filter(!dead)
-              .select(col("k"),
-                when(col("__bDel").isNull,
-                  coalesce(col("__pv"), zeroOf(vt)) +
-                    coalesce(col("__incSum"), zeroOf(vt)))
-                  .when(col("__bDel"), col("__incSum"))
-                  .otherwise(coalesce(col("__bVal"), zeroOf(vt)) +
-                    coalesce(col("__incSum"), zeroOf(vt)))
-                  .cast(vt).as("v"),
-                coalesce(col("__incTs"), col("__bTs"), col("__pts"))
-                  .as("ts"))
-            pr.join(batch.select("k"), Seq("k"), "left_anti")
-              .select(col("k"), col("__pv").as("v"),
-                col("__pts").as("ts"))
-              .unionAll(updated)
-          case None =>
-            batch.filter(!dead)
-              .select(col("k"),
-                when(coalesce(col("__bDel"), lit(false)),
-                  col("__incSum"))
-                  .otherwise(coalesce(col("__bVal"), zeroOf(vt)) +
-                    coalesce(col("__incSum"), zeroOf(vt)))
-                  .cast(vt).as("v"),
-                coalesce(col("__incTs"), col("__bTs")).as("ts"))
-        }
-        Some(m -> combined)
-      } else if (incWrites.nonEmpty && writes.isEmpty) {
-        // increment-built read metric: end state = carried total plus
-        // this batch's delta sum per key
-        val frames = incWrites.map { s =>
-          val keyCol = PlanBuilder.joinKeys(s.keys.map(k =>
-            strCast(k, exprColumn(k, s.frames, s.timeReg, s.idx),
-              s.frames)))
-          df.select(keyCol.as("k"),
-            exprColumn(s.valueIr.get, s.frames, s.timeReg, s.idx)
-              .cast(vt).as("v"),
-            unix_timestamp(s.timeReg).as("ts"),
-            ordKey(s.idx).as("ordk"),
-            coalesce(s.cond, lit(false)).as("__c"))
-            .filter(col("__c")).drop("__c")
-        }
-        val batchSum = frames.reduce(_ unionAll _)
-          .filter(col("v").isNotNull)
-          .groupBy("k")
-          .agg(sum("v").as("v"),
-            max_by(col("ts"), col("ordk")).as("ts"))
-        val merged = carriedState(m) match {
-          case Some(prev) =>
-            prev.withColumnRenamed("v", "pv")
-              .withColumnRenamed("ts", "pts")
-              .join(batchSum, Seq("k"), "full_outer")
-              .select(col("k"),
-                (coalesce(col("pv"), zeroOf(vt)) +
-                  coalesce(col("v"), zeroOf(vt))).cast(vt).as("v"),
-                coalesce(col("ts"), col("pts")).as("ts"))
-          case None => batchSum
-        }
-        Some(m -> merged)
-      } else if (writes.isEmpty) carriedState(m).map(m -> _)
-      else {
-        val frames = writes.map { s =>
-          val keyCol = PlanBuilder.joinKeys(s.keys.map(k =>
-            strCast(k, exprColumn(k, s.frames, s.timeReg, s.idx),
-              s.frames)))
-          val valueCol = s.op match {
-            case OpDel => lit(null).cast(vt)
-            case _ => valCast(s.valueIr.get,
-              exprColumn(s.valueIr.get, s.frames, s.timeReg, s.idx),
-              s.frames, vt)
-          }
-          df.select(keyCol.as("k"), valueCol.as("v"),
-            lit(s.op == OpDel).as("is_del"),
-            // last-write event time, for `del … after d` state expiry
-            unix_timestamp(s.timeReg).as("ts"),
-            ordKey(s.idx).as("ordk"),
-            coalesce(s.cond, lit(false)).as("__c"))
-            .filter(col("__c")).drop("__c")
-        }
-        val batchLast = frames.reduce(_ unionAll _)
-          .groupBy("k")
-          .agg(max_by(struct(col("is_del"), col("v"), col("ts")),
-            col("ordk")).as("last"))
-          .select(col("k"), col("last.is_del").as("is_del"),
-            col("last.v").as("v"), col("last.ts").as("ts"))
-        val survivors = batchLast.filter(!col("is_del"))
-          .select("k", "v", "ts")
-        val merged = carriedState(m) match {
-          case Some(prev) =>
-            prev.join(batchLast.select("k"), Seq("k"), "left_anti")
-              .unionAll(survivors)
-          case None => survivors
-        }
-        Some(m -> merged)
-      }
+      val ws = sites.filter(s => s.metric.name == m &&
+        (s.op != OpDel || s.afterSeconds.isEmpty)).toSeq
+      if (ws.isEmpty) carriedState(m).map(m -> _)
+      else Some(m -> {
+        val keyCols = ws.head.keys.indices.map(i => col(s"k$i"))
+        val batch = cellFold(ws, vt, Seq("k"), _.select(
+          PlanBuilder.joinKeys(keyCols).as("k"), col("v"),
+          // last-write event time, for `del … after d` state expiry
+          unix_timestamp(col("ts")).as("ts"), col("ordk"), col("__d")))
+        val carried = carriedState(m).map(_.select(col("k"),
+          col("v").as("__pv"), col("ts").as("__pts")))
+        // only a cell with no barrier reads its carried datum, and only
+        // increments make one
+        val withPrev = carried.filter(_ => ws.exists(increments))
+          .fold(batch)(p => batch.join(p, Seq("k"), "left"))
+        val (prev, prevTs) =
+          if (withPrev.columns.contains("__pv"))
+            (coalesce(col("__pv"), zeroOf(vt)), col("__pts"))
+          else (zeroOf(vt), lit(null).cast(LongType))
+        val updated = withPrev.filter(cellLive).select(col("k"),
+          cellValue(prev, vt).as("v"),
+          coalesce(col("__incTs"), col("__bTs"), prevTs).as("ts"))
+        carried.fold(updated)(p => p.join(batch.select("k"), Seq("k"),
+          "left_anti").select(col("k"), col("__pv").as("v"),
+          col("__pts").as("ts")).unionAll(updated))
+      })
     }.toMap
-  }
 
   private def kindName(k: Ir.Kind): String = k match {
     case Ir.Counter => "counter"

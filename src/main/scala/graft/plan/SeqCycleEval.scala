@@ -86,7 +86,7 @@ private[plan] object SeqCycleEval {
     * (__sq_ord, __sqv_<read name>*) with one row per input row.
     */
   def resolve(base: DataFrame, sites: Seq[SiteSpec], reads: Seq[ReadSpec],
-      metrics: Seq[MetricSpec], textCap: Long): DataFrame = {
+      metrics: Seq[MetricSpec]): DataFrame = {
     val spark = base.sparkSession
     val stateNames = reads.map(_.name).toSet
     val metricIdx = metrics.map(_.name).zipWithIndex.toMap
@@ -228,7 +228,6 @@ private[plan] object SeqCycleEval {
     }
     val nMetrics = metrics.length
     val vts = metricVts
-    val cap = textCap
 
     // merged event walk positions: reads refresh BEFORE the same-idx
     // site applies (a read at site j sees writes from sites < j only)
@@ -248,8 +247,6 @@ private[plan] object SeqCycleEval {
       // (store.go GetDatum), seeded from the carried relation when the
       // touching row carries a seed for that key
       val state = Array.fill(nMetrics)(mutable.HashMap[String, Any]())
-      val appended = Array.fill(nMetrics)( // concat-cap raw chars
-        mutable.HashMap[String, Long]())
       // compiled ONCE per task: codegen'd (interpreted-fallback)
       // projections over the thin residual expressions. The walk is
       // the sequential bottleneck — per-row interpreted tree-eval
@@ -335,24 +332,9 @@ private[plan] object SeqCycleEval {
                         }
                     case OpSet => state(m)(k) = copyOf(v)
                     case OpConcat =>
-                      // mirror withCappedInc: prior RAW append lengths
-                      // gate; the crossing append keeps its prefix
-                      val sv = v.asInstanceOf[UTF8String]
-                      val len = sv.numChars().toLong
-                      val prior = appended(m).getOrElse(k, 0L)
-                      val take =
-                        if (cap <= 0) len
-                        else math.min(math.max(cap - prior, 0L), len)
-                      appended(m)(k) = prior + len
-                      if (take > 0) {
-                        val cur = touch(m, k)
-                          .asInstanceOf[UTF8String]
-                        val part =
-                          if (take == len) sv
-                          else sv.substring(0, take.toInt)
-                        state(m)(k) = UTF8String.concat(cur,
-                          part.clone())
-                      }
+                      state(m)(k) = UTF8String.concat(
+                        touch(m, k).asInstanceOf[UTF8String],
+                        v.asInstanceOf[UTF8String].clone())
                   }
                 }
               }

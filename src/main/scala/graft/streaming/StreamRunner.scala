@@ -143,21 +143,15 @@ final class StreamRunner(program: Ir.Program, spark: SparkSession,
     */
   def reload(newProgram: Ir.Program): Unit = synchronized {
     try {
-      val probe = graft.mtail.LogLines.fromLines(
-        spark.range(0).selectExpr("CAST('' AS STRING) AS line"), "line")
-      val pb = new PlanBuilder(newProgram, probe, defaultYear,
-        overrideZone = overrideZone)
+      // the probe plan doubles as the load-time zero-init snapshot:
+      // merging its empty-input cells publishes any NEW scalar counters
+      // as 0 @ epoch-0 immediately, a no-op for cells already live
+      val pb = publishZeroInit(newProgram)
       carriedState = carriedState.filter { case (m, sdf) =>
         newProgram.decls.exists(_.name == m) &&
           sdf.schema("v").dataType == pb.metricType(m)
       }
       prog = newProgram
-      // the probe plan doubles as the load-time zero-init snapshot:
-      // merging its empty-input cells publishes any NEW scalar counters
-      // as 0 @ epoch-0 immediately (see publishZeroInit), a no-op for
-      // cells already live
-      store.merge(Snapshot.collect(pb.snapshot()),
-        newProgram.concatTextMetrics)
       internalStore.merge(Seq(Snapshot.Cell("counter",
         "prog_loads_total", Map("prog" -> newProgram.name),
         Snapshot.VInt(1), None)))
@@ -183,16 +177,17 @@ final class StreamRunner(program: Ir.Program, spark: SparkSession,
     * until new lines happened to arrive. Re-merging is a no-op for
     * live cells (counters add 0, last-write ts wins), and the empty
     * probe keeps the cells type-exact with real batch plan semantics.
+    * Returns the probe plan, which [[reload]] also types against.
     */
-  private def publishZeroInit(): Unit = {
+  private def publishZeroInit(p: Ir.Program): PlanBuilder = {
     val probe = graft.mtail.LogLines.fromLines(
       spark.range(0).selectExpr("CAST('' AS STRING) AS line"), "line")
-    val pb = new PlanBuilder(prog, probe, defaultYear,
+    val pb = new PlanBuilder(p, probe, defaultYear,
       overrideZone = overrideZone)
-    store.merge(Snapshot.collect(pb.snapshot()),
-      prog.concatTextMetrics)
+    store.merge(Snapshot.collect(pb.snapshot()), p.concatTextMetrics)
+    pb
   }
-  publishZeroInit()
+  publishZeroInit(prog)
 
   /** Start over a streaming Dataset with a `line` STRING column (e.g.
     * `spark.readStream.format("text"|"socket")`).

@@ -25,17 +25,6 @@ object GraftBridge {
   def eagerExpression(c: Column): Expression =
     classic.ColumnNodeToExpressionConverter(c.node)
 
-  /** Release the storage behind a `localCheckpoint()`ed DataFrame —
-    * its plan is a LogicalRDD leaf whose RDD was persisted by the
-    * checkpoint; `unpersist` on the DataFrame itself would look for a
-    * cache-manager entry and find none.
-    */
-  def unpersistCheckpoint(df: Dataset[_]): Unit =
-    df.queryExecution.analyzed.foreach {
-      case lr: execution.LogicalRDD => val _ = lr.rdd.unpersist(false)
-      case _ =>
-    }
-
   /** Analyze `cols` against `schema` and return fully resolved, bound
     * expressions suitable for interpreted `eval(InternalRow)` — the
     * row layout is exactly `schema`'s field order. Used by the

@@ -518,6 +518,16 @@ class VmSemanticsSpec extends SparkSpec {
         |}
         |""".stripMargin, Seq("ab", "cd", "ef"))
     assert(cells(("acc", Map.empty)) == VStr("abcdef"))
+    // a cross-line read of the running concat sees every suffix
+    val read = run(
+      """hidden text t0
+        |gauge l
+        |/^(?P<s>[a-z]+)$/ {
+        |  t0 += $s
+        |  l = len(t0)
+        |}
+        |""".stripMargin, Seq("a", "bb", "ccc"))
+    assert(read(("l", Map.empty)) == VInt(6))
     val e = intercept[IllegalArgumentException] {
       Frontend.parse("text l\n/a/ { l++ }\n", "vmsem")
     }
@@ -529,36 +539,24 @@ class VmSemanticsSpec extends SparkSpec {
     }
   }
 
-  test("spark.graft.text.maxConcatChars caps the cross-line concat " +
-      "READ stream at exactly the first N raw characters") {
-    // the read of a `+=`-built text accumulates a running concat per
-    // cell; the cap bounds that state for 100 TB batches. Exact
-    // contract: capped stream ≡ substr(raw stream, 1, N)
+  test("a read of a `+=`-built text sees a float suffix the way Cat " +
+      "pops it: uppercase 'G' (vm.go:171-186)") {
     val src =
-      """hidden text t0
-        |gauge l
-        |/^(?P<s>[a-z]+)$/ {
-        |  t0 += $s
-        |  l = len(t0)
+      """hidden text t
+        |text o
+        |text e
+        |/^(?P<x>\d+)$/ {
+        |  t += $x * 1e30
+        |  o = t
+        |  e += $x * 1e30
         |}
         |""".stripMargin
-    val data = Seq("a", "bb", "ccc") // raw stream "abbccc" (6 chars)
-    val uncapped = run(src, data)
-    assert(uncapped(("l", Map.empty)) == VInt(6))
-    spark.conf.set("spark.graft.text.maxConcatChars", "4")
-    try {
-      val capped = run(src, data)
-      // "abbc": the third append truncates mid-value, later ones drop
-      assert(capped(("l", Map.empty)) == VInt(4))
-    } finally spark.conf.unset("spark.graft.text.maxConcatChars")
-    // a cap past Int.MaxValue must behave as unlimited, not wrap the
-    // substr length negative (which would silently DROP all text)
-    spark.conf.set("spark.graft.text.maxConcatChars",
-      (Int.MaxValue.toLong + 10L).toString)
-    try {
-      val huge = run(src, data)
-      assert(huge(("l", Map.empty)) == VInt(6))
-    } finally spark.conf.unset("spark.graft.text.maxConcatChars")
+    val cells = run(src, Seq("2"))
+    val vm = graft.mtail.MiniVm.run(Frontend.parse(src, "vmsem"), Seq("2"))
+      .map(c => (c.name, c.labels) -> c.value).toMap
+    assert(cells(("o", Map.empty)) == VStr("2E+30"))
+    assert(cells(("e", Map.empty)) == VStr("2E+30"))
+    assert(cells == vm)
   }
 
   test("a write cond reading a mixed =/++ metric compiles and folds " +

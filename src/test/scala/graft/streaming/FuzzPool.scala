@@ -108,7 +108,7 @@ object FuzzPool {
       // with ++/+=/=/del — the full mixed fold across batch cuts
       "g0 = c1[\"beta\"]",
       // `+=`-built text reads (concat as-of fold) and keyed text
-      // set/del mixing — mixedTextFrame's per-cell was_set must make
+      // set/del mixing — mixedFrame's per-cell was_set must make
       // the store merge replace-after-set and append otherwise
       "g0 = len(t0)",
       "t1[$s] += $s",

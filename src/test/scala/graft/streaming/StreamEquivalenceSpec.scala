@@ -183,5 +183,51 @@ class StreamEquivalenceSpec extends SparkSpec {
     assert(cells(("hits", Map("a" -> "b")))._2 == Snapshot.VInt(1),
       cells) // restarted after the del, not 2
     assert(!cells.contains(("last", Map("u" -> "u"))), cells)
+
+    // the carried read state and the export fold of each increment
+    // kind (set-only, increment-only, mixed `=`/`++`, mixed `=`/`+=`
+    // text): batch 1 ends with `del h[a]`, alone or followed by a
+    // write, and batch 2 reads h[a] back; batch 2 likewise deletes the
+    // carried h[b] and batch 3 reads it — every split must equal the
+    // one-shot run over all lines
+    val kinds = Seq( // (decl, capture, set, inc)
+      ("gauge", "\\d+", "h[$s] = $x", "h[$s] = $x"),
+      ("counter", "\\d+", "h[$s] += $x", "h[$s]++"),
+      ("gauge", "\\d+", "h[$s] = $x", "h[$s] += $x"),
+      ("text", "[a-z0-9]+", "h[$s] = $x", "h[$s] += $x"))
+    for ((decl, cap, set, inc) <- kinds; later <- Seq(false, true)) {
+      val prog = Frontend.parse(
+        s"""$decl h by s
+           |$decl out by s
+           |/^set (?P<s>\\w+) (?P<x>$cap)$$/ {
+           |  $set
+           |}
+           |/^inc (?P<s>\\w+) (?P<x>$cap)$$/ {
+           |  $inc
+           |}
+           |/^del (?P<s>\\w+)$$/ {
+           |  del h[$$s]
+           |}
+           |/^read (?P<s>\\w+)$$/ {
+           |  out[$$s] = h[$$s]
+           |}
+           |""".stripMargin, "delkinds.mtail")
+      def thenInc(c: String) = if (later) Seq(s"inc $c 4") else Nil
+      val batches = Seq(
+        Seq("set a 5", "inc a 2", "set b 1", "inc b 3", "del a") ++
+          thenInc("a"),
+        Seq("read a", "inc b 2", "read b", "inc a 1", "read a",
+          "del b") ++ thenInc("b"),
+        Seq("read b", "read a"))
+      val oneShot = norm(Snapshot.collect(new PlanBuilder(prog,
+        LogLines.fromLines(batches.flatten.toDF("line"), "line"), 0)
+        .snapshot()))
+      val split = new StreamRunner(prog, spark, 0)
+      batches.zipWithIndex.foreach { case (b, i) =>
+        split.processBatch(b.toDF("line"), i.toLong)
+      }
+      assert(norm(split.store.snapshot()) == oneShot,
+        s"$decl: $set / $inc, a write after each del: $later")
+    }
   }
 }
