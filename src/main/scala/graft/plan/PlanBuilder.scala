@@ -2689,7 +2689,7 @@ final class PlanBuilder(program: Ir.Program, lines: DataFrame,
     * successfully written (zero value, no stamp, `__create_only`
     * true so the streaming store merge inserts-if-absent and never
     * overwrites a live cell). Created cells respect keyless `del`
-    * ordering (delFilter on the creation ordinals) and count toward
+    * ordering (delFilterFor on the creation ordinals) and count toward
     * `limit N` eviction like any datum (null stamp → evicted first,
     * same as the interpreter's None).
     */
@@ -2702,9 +2702,7 @@ final class PlanBuilder(program: Ir.Program, lines: DataFrame,
     if (mCreates.isEmpty || decl.hidden) return baseFlagged
     val vt = metricType(decl.name)
     val keyNames = decl.keys.indices.map(i => s"k$i")
-    val dels = sites.filter(s => s.metric.name == decl.name &&
-      s.op == OpDel && s.afterSeconds.isEmpty).toSeq
-    val createdU = delFilterFor(decl, dels)(
+    val createdU = delFilterFor(decl, delSites(decl.name))(
       mCreates.map { cr =>
         df.select((cr.keyCols.zipWithIndex.map { case (c, i) =>
           c.as(s"k$i") } :+ ordKey(cr.idx).as("ordk") :+
@@ -2764,33 +2762,20 @@ final class PlanBuilder(program: Ir.Program, lines: DataFrame,
     val delDf = dels.map(siteFrame(_, vt)).reduce(_ unionAll _)
       .groupBy(keyNames.map(col): _*)
       .agg(max("ordk").as("__del_ord"))
-    if (keyNames.isEmpty) {
-      // the global agg emits one row even when no del fired, with
-      // null __del_ord; `ordk > null` is null, so guard like the
-      // keyed branch or every update row is dropped
-      u.crossJoin(broadcast(delDf))
-        .filter(col("__del_ord").isNull ||
-          col("ordk") > col("__del_ord"))
-        .drop("__del_ord")
-    } else {
-      u.join(broadcast(delDf), keyNames, "left")
-        .filter(col("__del_ord").isNull ||
-          col("ordk") > col("__del_ord"))
-        .drop("__del_ord")
-    }
+    // no keys: the global agg's one row, whose __del_ord is null when
+    // no del fired — `ordk > null` is null, hence the isNull guard
+    u.join(broadcast(delDf), keyNames, "left")
+      .filter(col("__del_ord").isNull || col("ordk") > col("__del_ord"))
+      .drop("__del_ord")
   }
 
   private def metricFrameBase(decl: Ir.MetricDecl): DataFrame = {
-    val mSites = sites.filter(_.metric.name == decl.name)
-    val updates = mSites.filter(_.op != OpDel).toSeq
-    val dels = mSites.filter(_.op == OpDel).filter(_.afterSeconds.isEmpty)
-      .toSeq
+    val updates = sites.filter(s => s.metric.name == decl.name &&
+      s.op != OpDel).toSeq
+    val dels = delSites(decl.name)
     val vt = metricType(decl.name)
 
     val keyNames = decl.keys.indices.map(i => s"k$i")
-
-    /** drop update rows at-or-before each cell's last keyless `del`. */
-    def delFilter(u: DataFrame): DataFrame = delFilterFor(decl, dels)(u)
 
     val setSites = updates.filter(_.op == OpSet)
     val incSites = updates.filter(_.op == OpInc)
@@ -2808,8 +2793,7 @@ final class PlanBuilder(program: Ir.Program, lines: DataFrame,
     val concatSites = updates.filter(_.op == OpConcat)
     if (setSites.nonEmpty &&
         (concatSites.nonEmpty || numeric && incSites.nonEmpty))
-      return mixedFrame(decl, vt, setSites ++ incSites ++ concatSites ++
-        dels)
+      return mixedFrame(decl, vt, updates ++ dels)
     // whether a batch value REPLACES the store cell on merge (the
     // batch contained a set-write) or ADDS to it (pure increments);
     // mixedFrame computes this per cell instead
@@ -2820,7 +2804,8 @@ final class PlanBuilder(program: Ir.Program, lines: DataFrame,
     }
 
     val unioned = updates.map(siteFrame(_, vt)).reduceOption(_ unionAll _)
-    val afterDel: Option[DataFrame] = unioned.map(delFilter)
+    // drop update rows at-or-before each cell's last `del`
+    val afterDel: Option[DataFrame] = unioned.map(delFilterFor(decl, dels))
 
     val agg: Option[DataFrame] = afterDel.map { u =>
       val aggs = decl.kind match {
@@ -3186,12 +3171,12 @@ final class PlanBuilder(program: Ir.Program, lines: DataFrame,
           col("v").as("__pv"), col("ts").as("__pts")))
         // only a cell with no barrier reads its carried datum, and only
         // increments make one
-        val withPrev = carried.filter(_ => ws.exists(increments))
-          .fold(batch)(p => batch.join(p, Seq("k"), "left"))
-        val (prev, prevTs) =
-          if (withPrev.columns.contains("__pv"))
-            (coalesce(col("__pv"), zeroOf(vt)), col("__pts"))
-          else (zeroOf(vt), lit(null).cast(LongType))
+        val (withPrev, prev, prevTs) =
+          carried.filter(_ => ws.exists(increments)) match {
+            case Some(p) => (batch.join(p, Seq("k"), "left"),
+              coalesce(col("__pv"), zeroOf(vt)), col("__pts"))
+            case None => (batch, zeroOf(vt), lit(null).cast(LongType))
+          }
         val updated = withPrev.filter(cellLive).select(col("k"),
           cellValue(prev, vt).as("v"),
           coalesce(col("__incTs"), col("__bTs"), prevTs).as("ts"))
